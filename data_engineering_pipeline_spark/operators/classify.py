@@ -302,14 +302,6 @@ def frozen_logratio(bucket: Column) -> Column:
     ) % F.lit(_DSIR_LR_MOD) - F.lit(_DSIR_LR_SHIFT)
 
 
-def frozen_logratio_sql(bucket_expr: str) -> str:
-    """DuckDB expression mirroring frozen_logratio() term for term."""
-    return (
-        f"(({bucket_expr}) * {_DSIR_LR_A} + {_DSIR_LR_B})"
-        f" % {_DSIR_LR_MOD} - {_DSIR_LR_SHIFT}"
-    )
-
-
 def fit_dsir_logratios(
     target: DataFrame,
     raw: DataFrame,

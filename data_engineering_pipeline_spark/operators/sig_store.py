@@ -1,4 +1,5 @@
-"""Band-bucketed MinHash signature store for incremental near-dup.
+"""Two-layout near-dup stores: the shared skeleton, and the
+band-bucketed MinHash signature store built on it.
 
 The flat store (streaming/sinks.py `_append_parquet` on one directory)
 re-reads and RE-BANDS every signature row per batch: BASELINE addendum
@@ -33,19 +34,22 @@ against `sigs`, so a partial append is healed by the replay. commit()
 moves `banded` files BEFORE `sigs` files — the one fatal order is a
 signature landing without its band rows (the doc would never be
 probed again); banded-without-sigs merely re-appends duplicate band
-rows on replay, which the candidate `distinct()` absorbs.
+rows on replay, which the candidate `distinct()` absorbs. A failed
+commit removes its own staging dir and raises every staging error.
 
 Banding parameters (num_hashes, bands, shingle n) are stamped into
 `_meta.json` and validated on open — the same layout-version
 discipline as refresh_shards' hash stamp: state built under different
 banding must not be probed incrementally. The prefix MODULI are pure
-layout, not structure (r12): handles adopt them from the store (root
+layout, not structure: handles adopt them from the store (root
 meta, overridden by each layout dir's own `_layout.json`), and only
 compact() may change them — it rewrites every file anyway, and the
 commit-time auto-compaction passes auto_grow=True so the partitioning
 doubles as the store outgrows its per-dir byte budget.
 
-Semantics are IDENTICAL to operators/dedup.py
+Everything above except the banding itself lives once, in
+`_TwoLayoutStore`; operators/vec_store.py's hyperplane-LSH vector store
+is the other subclass. Semantics are IDENTICAL to operators/dedup.py
 incremental_minhash_dedup (same shingles, signatures, banding structs,
 estimator, threshold rule) — pinned by the store-vs-flat parity test.
 """
@@ -57,13 +61,13 @@ import json
 import os
 import shutil
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _META = "_meta.json"
 _LAYOUT = "_layout.json"
-_LAYOUT_VERSION = "banded-v1"
 
 
 def _read_layout(base: str) -> dict | None:
@@ -87,7 +91,575 @@ def _write_layout(base: str, layout: dict) -> None:
     os.rename(tmp, os.path.join(base, _LAYOUT))
 
 
-class BandedSignatureStore:
+class _Layout(NamedTuple):
+    """One of a store's two hive-partitioned layouts. The BUCKET
+    layout is partitioned (table_col, pfx_col) with the prefix taken of
+    bucket_col; the PAYLOAD layout (no table/bucket cols) by `pfx` of
+    the id hash."""
+
+    dir: str  # under the store root
+    modulus: str  # store attribute, _meta.json and _layout.json key
+    table_col: str = ""
+    bucket_col: str = ""
+    pfx_col: str = "pfx"
+    n_tables_attr: str = ""  # store attribute: table dirs per prefix
+
+    @property
+    def pcols(self) -> tuple[str, ...]:
+        if self.table_col:
+            return (self.table_col, self.pfx_col)
+        return (self.pfx_col,)
+
+
+class _TwoLayoutStore:
+    """The skeleton both incremental near-dup stores share: a probe
+    scans the BUCKET layout pruned to the buckets its own batch
+    touches, then exact-verifies candidates against the PAYLOAD layout
+    pruned to the candidate ids' prefixes (the partition-and-filter
+    shape of distributed similarity joins). A subclass declares its
+    structural meta params, the two `_Layout`s, and how a batch becomes
+    bucket rows (`_bucket_rows`) and payload rows (`_payload_rows`);
+    its `probe` signs the batch and hands `_probe` the probe-side rows
+    and the verify expression."""
+
+    _KIND: tuple[str, str]  # (store noun, structural-params noun)
+    _LAYOUT_VERSION: str
+    _STRUCTURAL: tuple[str, ...]
+    _META_KEYS: tuple[str, ...]  # _meta.json fields after "layout"
+    _BUCKETS: _Layout
+    _PAYLOAD: _Layout
+    _key: str  # id column of the stored rows
+
+    # per-partition-dir file count that triggers auto-compaction at
+    # the end of a commit: every commit adds ~1 file per touched dir,
+    # so an unmaintained long stream accumulates one file per batch
+    # per dir and the probe's pruned reads degrade into a
+    # small-files listing problem. 64 bounds a dir's files while
+    # keeping compaction amortized (one fold per 64 batches).
+    COMPACT_THRESHOLD = 64
+    # auto-grow target: compact(auto_grow=True) doubles a layout's
+    # prefix modulus until each partition dir holds at most this many
+    # bytes — the invariant that keeps a probe's read volume
+    # batch-proportional as the corpus grows (each opened dir is
+    # 1/(tables*modulus) of the store; a fixed modulus makes that
+    # slice grow linearly with the corpus, addendum 59's honest
+    # ceiling).
+    AUTO_GROW_DIR_BYTES = 8 * 1024 * 1024
+    MAX_PFX = 4096
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        self._check_meta()
+        # heal staging dirs left by a crashed commit (replay re-stages)
+        for d in glob.glob(os.path.join(root, ".stage-*")):
+            shutil.rmtree(d, ignore_errors=True)
+        # heal a crashed compact(): its swap window is rename(base ->
+        # aside) then rename(stage -> base) — dying between the two
+        # leaves the live dir MISSING with the aside holding the only
+        # copy. Restore the aside when base is gone; staged compacts
+        # are garbage either way (a rerun re-stages).
+        for lay in self._layouts():
+            base = self._path(lay)
+            asides = sorted(glob.glob(base + ".old-*"))
+            if not os.path.isdir(base) and asides:
+                os.rename(asides.pop(0), base)
+            for d in asides:
+                shutil.rmtree(d, ignore_errors=True)
+            for d in glob.glob(base + ".compact-*"):
+                shutil.rmtree(d, ignore_errors=True)
+        # per-layout moduli win over everything (see _check_meta):
+        # each layout dir carries the modulus its hive values were
+        # computed under, so a crash between compact()'s two layout
+        # swaps (bucket layout migrated, payload not yet) still reads
+        # BOTH layouts under their true moduli. Read AFTER healing —
+        # the layout file rides inside the dir the heal may restore.
+        for lay in self._layouts():
+            rec = _read_layout(self._path(lay))
+            if rec is not None:
+                setattr(self, lay.modulus, int(rec[lay.modulus]))
+
+    def _layouts(self) -> tuple[_Layout, _Layout]:
+        # the order is the commit's move order: a payload row landing
+        # without its bucket rows would never be probed again
+        return (self._BUCKETS, self._PAYLOAD)
+
+    def _path(self, lay: _Layout) -> str:
+        return os.path.join(self.root, lay.dir)
+
+    def _mod(self, lay: _Layout) -> int:
+        return getattr(self, lay.modulus)
+
+    def _pfx(self, lay: _Layout, m: int, col=None):
+        """`lay`'s hive prefix under modulus m: the bucket column's
+        residue in the bucket layout, the id hash's (of `col`, default
+        the id column) in the payload layout."""
+        if lay.bucket_col:
+            return F.pmod(F.col(lay.bucket_col), F.lit(m))
+        if col is None:
+            col = F.col(self._key)
+        return F.pmod(F.xxhash64(col), F.lit(m))
+
+    # ---------------------------------------------------------- meta
+    def _meta_dict(self) -> dict:
+        return {
+            "layout": self._LAYOUT_VERSION,
+            **{k: getattr(self, k) for k in self._META_KEYS},
+        }
+
+    def _check_meta(self) -> None:
+        mp = os.path.join(self.root, _META)
+        if os.path.exists(mp):
+            with open(mp) as fh:
+                have = json.load(fh)
+            mine = self._meta_dict()
+            if any(have.get(k) != mine[k] for k in self._STRUCTURAL):
+                raise ValueError(
+                    "%s %s was built with %r, opened with %r — %s are "
+                    "structural; rebuild the store instead of probing "
+                    "across them"
+                    % (self._KIND[0], self.root, have, mine, self._KIND[1])
+                )
+            # adopt the store's layout moduli (per-layout _layout.json
+            # files override these again in __init__)
+            for lay in self._layouts():
+                if lay.modulus in have:
+                    setattr(self, lay.modulus, int(have[lay.modulus]))
+
+    def _write_meta(self) -> None:
+        if not os.path.exists(os.path.join(self.root, _META)):
+            os.makedirs(self.root, exist_ok=True)
+            self._rewrite_meta()
+
+    def _rewrite_meta(self) -> None:
+        """Atomic meta replace. Once the meta exists ONLY compact() may
+        call this (a migration rewrote every file, so the new moduli
+        describe the store truthfully)."""
+        mp = os.path.join(self.root, _META)
+        tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(self._meta_dict(), fh)
+        os.rename(tmp, mp)
+
+    # -------------------------------------------------------- layout
+    def exists(self) -> bool:
+        return _dir_has_parquet(self._path(self._PAYLOAD))
+
+    def _dirs(self, lay: _Layout, keep: set[tuple] | None) -> list[str]:
+        """`lay`'s leaf partition dirs, sorted level by level, keeping
+        only those whose partition-value tuple is in `keep`."""
+        found = [(self._path(lay), ())]
+        for c in lay.pcols:
+            found = [
+                (d, vals + (int(os.path.basename(d).split("=", 1)[1]),))
+                for parent, vals in found
+                for d in sorted(glob.glob(os.path.join(parent, f"{c}=*")))
+            ]
+        return [d for d, vals in found if keep is None or vals in keep]
+
+    def _read(self, lay: _Layout, dirs: list[str], like: DataFrame,
+              cols: list[str]) -> DataFrame:
+        """Read the selected partition dirs (basePath keeps partition
+        columns parsing); empty selection -> typed empty frame."""
+        dirs = [d for d in dirs if _dir_has_parquet(d)]
+        if not dirs:
+            return like.select(*cols).limit(0)
+        return (
+            self.spark.read.option("basePath", self._path(lay))
+            .parquet(*dirs)
+            .select(*cols)
+        )
+
+    def _payload_rows(self, df: DataFrame) -> DataFrame:
+        return df.select(*self._payload_cols())
+
+    # --------------------------------------------------------- probe
+    def seen_ids(self, ids: DataFrame) -> DataFrame:
+        """Store ids restricted to the prefixes of `ids` — the pruned
+        form of `existing.select(id)` for anti-joins. Any store id
+        equal to a probe id shares its prefix, so the restriction is
+        exact."""
+        key, lay = self._key, self._PAYLOAD
+        if not self.exists():
+            return ids.select(key).limit(0)
+        if self._mod(lay) == 1:
+            # one prefix dir: the collect could only ever return {0} —
+            # skip the extra driver job and read the single dir
+            keep = None
+        else:
+            keep = {
+                tuple(r)
+                for r in ids.select(
+                    self._pfx(lay, self._mod(lay)).alias("p")
+                ).distinct().collect()
+            }
+        return self._read(
+            lay, self._dirs(lay, keep), ids.select(key), [key]
+        )
+
+    def _probe(self, batch, probe_side, score, score_col, threshold,
+               assume_fresh, max_bucket_size, stats):
+        """(fresh, pairs) for a signed, checkpointed `batch`:
+        `probe_side(batch)` gives its probe-side bucket rows, and
+        `score(a, b)` the verify expression over two candidates'
+        payload columns (`a(c)` / `b(c)` name each side's column c);
+        pairs = (id_a, id_b, score_col) with score_col >= threshold."""
+        key, bl, pl = self._key, self._BUCKETS, self._PAYLOAD
+        tcol, bcol = bl.table_col, bl.bucket_col
+        if assume_fresh or not self.exists():
+            fresh = batch
+        else:
+            # no broadcast hint: the seen side is pruned-store-sized
+            # (batch-sized only when prefixes are selective) — AQE
+            # picks the strategy from the pruned size at runtime
+            fresh = batch.join(
+                self.seen_ids(batch.select(key)), key, "left_anti"
+            ).localCheckpoint(eager=False)
+
+        # the batch's buckets name the ONLY store partitions a
+        # candidate can live in: the prefix is a pure function of the
+        # bucket and the join requires bucket equality. The
+        # touched-dirs collect is skipped when it cannot prune
+        # anything: on an EMPTY store there are no dirs, and at
+        # modulus 1 every non-empty batch touches every table's one
+        # dir, so the collect is a constant (an empty batch then reads
+        # dirs the bucket-equality join immediately drops — harmless).
+        # Skipping it also lets the probe rows stay lazy: their only
+        # other consumer is the candidate join, and under AQE a
+        # localCheckpoint materializes the plan at call time (one
+        # serial driver job saved per probe).
+        probe_rows = probe_side(batch)
+        if self.exists() and self._mod(bl) > 1:
+            probe_rows = probe_rows.localCheckpoint(eager=False)
+            touched = {
+                tuple(r)
+                for r in probe_rows.select(
+                    tcol, self._pfx(bl, self._mod(bl)).alias("p")
+                ).distinct().collect()
+            }
+        else:
+            touched = None if self.exists() else set()
+        sel = self._dirs(bl, touched)
+        if stats is not None:
+            every = self._dirs(bl, None)
+            stats[f"{bl.dir}_dirs_opened"] = len(
+                [d for d in sel if _dir_has_parquet(d)]
+            )
+            stats[f"{bl.dir}_dirs_total"] = len(every)
+            stats[f"{bl.dir}_files_opened"] = sum(_n_parquet(d) for d in sel)
+            stats[f"{bl.dir}_files_total"] = sum(
+                _n_parquet(d) for d in every
+            )
+        store_rows = self._read(bl, sel, probe_rows, [key, tcol, bcol])
+        # store rows outside the touched buckets can never satisfy the
+        # bucket-equality join — the pruned union is exact
+        all_rows = store_rows.unionByName(self._bucket_rows(fresh))
+        if max_bucket_size is not None:
+            # bucket population is judged on the CORPUS view (store
+            # rows in the touched partitions + this batch's fresh
+            # rows): the flood lives there. Keep the cap SMALLEST ids
+            # per bucket — the canonical representatives under the
+            # keep-lowest-id survivor rule (see the probe docstrings).
+            if stats is not None:
+                stats["capped_buckets"] = (
+                    all_rows.groupBy(tcol, bcol)
+                    .agg(F.count(F.lit(1)).alias("__bsz"))
+                    .filter(F.col("__bsz") > max_bucket_size)
+                    .count()
+                )
+            w = Window.partitionBy(tcol, bcol).orderBy(key)
+            all_rows = (
+                all_rows.withColumn("__rk", F.row_number().over(w))
+                .filter(F.col("__rk") <= max_bucket_size)
+                .drop("__rk")
+            )
+        # no broadcast hint on the batch side: for a micro-batch AQE
+        # broadcasts it anyway (the probe rows are checkpointed, so
+        # their size is exact at runtime), while a bootstrap probe of a
+        # whole corpus through an empty store would otherwise
+        # driver-collect millions of bucket rows into a forced
+        # broadcast (a 500k-doc rebuild measured minutes for it)
+        a = probe_rows.alias("a")
+        b = all_rows.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col(f"a.{tcol}") == F.col(f"b.{tcol}"))
+                & (F.col(f"a.{bcol}") == F.col(f"b.{bcol}"))
+                & (F.col(f"a.{key}") != F.col(f"b.{key}")),
+            )
+            .select(
+                F.least(F.col(f"a.{key}"), F.col(f"b.{key}")).alias("id_a"),
+                F.greatest(
+                    F.col(f"a.{key}"), F.col(f"b.{key}")
+                ).alias("id_b"),
+            )
+            .distinct()
+        )
+        # checkpoint cand ONLY when something reuses it across actions
+        # (the payload-pruning collect below, or the stats counter).
+        # This is not an optimization nicety but load-bearing:
+        # under AQE, even localCheckpoint(eager=False) materializes
+        # every shuffle stage of the plan AT CALL TIME (Dataset.toRdd
+        # builds the AQE query stages), so an unconditional checkpoint
+        # ran the full candidate join + distinct inside probe() — on a
+        # bootstrap probe of a corpus containing a template flood
+        # that is the quadratic wall, paid even when the caller never
+        # consumes the pairs (commit-only ingest).
+        # at payload modulus 1 the prefix collect is a constant ({0}) —
+        # skip it, which ALSO keeps cand fully lazy on stats-less
+        # probes: the candidate join then first runs inside the
+        # caller's own action instead of as a serial job here (the
+        # AQE-eager-checkpoint finding, addendum 68)
+        prune = self.exists() and self._mod(pl) > 1
+        if prune or stats is not None:
+            cand = cand.localCheckpoint(eager=False)
+        if stats is not None:
+            stats["cand_pairs"] = cand.count()
+        cols = self._payload_cols()
+        if self.exists():
+            if prune:
+                m = self._mod(pl)
+                cand_pfx = {
+                    tuple(r)
+                    for r in cand.select(
+                        F.explode(
+                            F.array(
+                                self._pfx(pl, m, F.col("id_a")),
+                                self._pfx(pl, m, F.col("id_b")),
+                            )
+                        ).alias("p")
+                    ).distinct().collect()
+                }
+            else:
+                cand_pfx = None
+            store_payload = self._read(
+                pl, self._dirs(pl, cand_pfx), batch, cols
+            )
+        else:
+            # EMPTY store: the cand_pfx collect's only purpose is
+            # pruning the payload read, and there is nothing to prune
+            # — but the collect would still MATERIALIZE the full
+            # candidate set eagerly. On a bootstrap probe whose
+            # caller never consumes the pairs (commit-only ingest of
+            # a corpus), that materialization is pure waste — and
+            # under a template flood it is the quadratic wall, paid
+            # for nothing (a 20k-copy flood made the collect
+            # effectively unbounded). Keep the whole pairs plan lazy
+            # instead; callers that do consume pairs pay the
+            # candidate volume exactly once.
+            store_payload = batch.select(*cols).limit(0)
+        lookup = store_payload.unionByName(self._payload_rows(fresh))
+
+        def side(s: str) -> DataFrame:
+            return lookup.select(
+                F.col(key).alias(f"id_{s}"),
+                *[F.col(c).alias(f"__{s}_{c}") for c in cols[1:]],
+            )
+
+        pairs = (
+            cand.join(side("a"), "id_a")
+            .join(side("b"), "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                score(
+                    lambda c: F.col(f"__a_{c}"), lambda c: F.col(f"__b_{c}")
+                ).alias(score_col),
+            )
+            .filter(F.col(score_col) >= threshold)
+        )
+        return fresh, pairs
+
+    # -------------------------------------------------------- commit
+    def commit(self, fresh: DataFrame, batch_id: int = 0) -> None:
+        """Append a batch's fresh rows: bucket rows FIRST, then payload
+        rows (see the module docstrings for the crash order). Each
+        partition dir only ever GAINS files — O(batch) writes — and
+        when the FULLEST payload dir crosses COMPACT_THRESHOLD files
+        the whole store folds to one file per dir (stage + swap, crash
+        leaves old or new set, both complete). A failed commit removes
+        its staging dir and raises every staging error."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        self._write_meta()
+        bl, pl = self._layouts()
+        stage = os.path.join(self.root, ".stage-" + uuid.uuid4().hex)
+        rows = (
+            (self._bucket_rows(fresh).withColumn(
+                bl.pfx_col, self._pfx(bl, self._mod(bl))
+            ), bl),
+            (self._payload_rows(fresh).withColumn(
+                pl.pfx_col, self._pfx(pl, self._mod(pl))
+            ), pl),
+        )
+
+        # one file per partition dir per commit: repartition by the
+        # partition columns so a batch adds (tables x modulus) files,
+        # not tasks x dirs
+        def _stage(df: DataFrame, lay: _Layout) -> None:
+            df.repartition(*lay.pcols).write.partitionBy(*lay.pcols).mode(
+                "overwrite"
+            ).parquet(os.path.join(stage, lay.dir))
+
+        # STAGE the two layouts concurrently (overlap independent
+        # jobs): the writes share only the checkpointed fresh frame
+        # (concurrent first-materialization of one local checkpoint is
+        # a synchronized RDDCheckpointData path), and
+        # the crash-order contract lives in the MOVES below, which
+        # stay strictly bucket-then-payload. Staging was two serial
+        # driver jobs per commit; for a micro-batch each is mostly
+        # fixed job cost, so overlapping them cuts the commit wall
+        # by close to the smaller write.
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futs = [pool.submit(_stage, df, lay) for df, lay in rows]
+            errs = [
+                e for e in (f.exception() for f in futs) if e is not None
+            ]
+            if len(errs) > 1:
+                raise ExceptionGroup(
+                    f"both staging writes of a {self._KIND[0]} commit "
+                    "failed", errs,
+                )
+            if errs:
+                raise errs[0]
+            tok = f"{batch_id}-{uuid.uuid4().hex}"
+            if _move_partition_files(
+                os.path.join(stage, bl.dir), self._path(bl), tok
+            ) == 0:
+                # empty batch: nothing to land (a replayed batch's
+                # fresh set is empty — no empty part-files accumulating)
+                return
+            _move_partition_files(
+                os.path.join(stage, pl.dir), self._path(pl), tok
+            )
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        # stamp each live layout dir with its modulus (first commit
+        # creates the dirs; later commits are a no-op stat)
+        for lay in (bl, pl):
+            if _read_layout(self._path(lay)) is None:
+                _write_layout(self._path(lay), {lay.modulus: self._mod(lay)})
+        # trigger on the FULLEST dir, not the lexicographically first:
+        # skewed/tiny batches don't touch dirs symmetrically, so a
+        # single sampled dir can lag the real maximum by a multiple
+        # (the walk is bounded — post-compaction every dir holds one
+        # file, so this counts at most dirs x threshold files).
+        # auto_grow: the fold is also the point where the store checks
+        # whether its partition dirs have outgrown the probe-read
+        # budget and doubles the prefix moduli if so.
+        dirs = self._dirs(pl, None)
+        if dirs and max(_n_parquet(d) for d in dirs) > self.COMPACT_THRESHOLD:
+            self.compact(auto_grow=True)
+
+    # --------------------------------------------------- maintenance
+    def migrate_flat(self, flat: DataFrame, batch_id: int = 0) -> None:
+        """One-shot migration from the flat single-directory store:
+        commit the whole flat frame as one batch (anti-joined against
+        anything already migrated, so a crashed migration replays to
+        convergence)."""
+        fresh = flat
+        if self.exists():
+            fresh = flat.join(
+                self.seen_ids(flat.select(self._key)), self._key,
+                "left_anti",
+            )
+        self.commit(fresh, batch_id)
+
+    def _flat_rows(self, df: DataFrame) -> DataFrame:
+        return df
+
+    def _migrate_flat_files(self):
+        """Migrate a FLAT layout (part-files directly in the root —
+        streaming/sinks.py's old `_append_parquet` shape) in place and
+        return the store. Crash-safe: the flat files are only removed
+        AFTER the migration commit lands; a replayed migration
+        anti-joins to a no-op."""
+        root = self.root
+        if not os.path.isdir(root):
+            return self
+        flat = sorted(f for f in os.listdir(root) if f.endswith(".parquet"))
+        if flat:
+            df = self.spark.read.parquet(
+                *[os.path.join(root, f) for f in flat]
+            )
+            self.migrate_flat(self._flat_rows(df))
+            for f in flat:
+                os.remove(os.path.join(root, f))
+            success = os.path.join(root, "_SUCCESS")
+            if os.path.exists(success):
+                os.remove(success)
+        return self
+
+    def _grown_pfx(self, base: str, n_dirs_per_pfx: int, cur: int) -> int:
+        total = 0
+        for r, _dirs, files in os.walk(base):
+            for f in files:
+                if f.endswith(".parquet"):
+                    try:
+                        total += os.path.getsize(os.path.join(r, f))
+                    except OSError:
+                        pass
+        new = cur
+        while (
+            new < self.MAX_PFX
+            and total / (n_dirs_per_pfx * new) > self.AUTO_GROW_DIR_BYTES
+        ):
+            new *= 2
+        return new
+
+    def _compact(self, to_bucket: int | None, to_payload: int | None,
+                 auto_grow: bool) -> None:
+        """compact() for both stores: see BandedSignatureStore.compact."""
+        new = {}
+        for lay, to in zip(self._layouts(), (to_bucket, to_payload)):
+            new[lay] = to or self._mod(lay)
+            if auto_grow and _dir_has_parquet(self._path(lay)):
+                n = (getattr(self, lay.n_tables_attr)
+                     if lay.n_tables_attr else 1)
+                new[lay] = max(
+                    new[lay], self._grown_pfx(self._path(lay), n, new[lay])
+                )
+        for lay in self._layouts():
+            base = self._path(lay)
+            if not _dir_has_parquet(base):
+                continue
+            df = self.spark.read.parquet(base)
+            if new[lay] != self._mod(lay):
+                df = df.drop(lay.pfx_col).withColumn(
+                    lay.pfx_col, self._pfx(lay, new[lay])
+                )
+            stage = base + ".compact-" + uuid.uuid4().hex[:8]
+            df.repartition(*lay.pcols).write.partitionBy(*lay.pcols).mode(
+                "overwrite"
+            ).parquet(stage)
+            _write_layout(stage, {lay.modulus: new[lay]})
+            aside = base + ".old-" + uuid.uuid4().hex[:8]
+            os.rename(base, aside)
+            os.rename(stage, base)
+            shutil.rmtree(aside, ignore_errors=True)
+        for lay, m in new.items():
+            setattr(self, lay.modulus, m)
+        self._rewrite_meta()
+
+
+class BandedSignatureStore(_TwoLayoutStore):
+    _KIND = ("signature store", "banding params")
+    _LAYOUT_VERSION = "banded-v1"
+    # params whose mismatch means the persisted state is semantically
+    # incompatible with this handle: probing across them silently
+    # misses duplicates, so they raise. The prefix MODULI are not in
+    # this set — they are pure layout, adopted from the store (only
+    # compact() may change them, rewriting every file under the new
+    # scheme), so a default-constructed handle keeps working on a
+    # store that has grown its partitioning.
+    _STRUCTURAL = ("layout", "n", "num_hashes", "bands")
+    _META_KEYS = ("n", "num_hashes", "bands", "sig_pfx", "bucket_pfx")
+    _BUCKETS = _Layout("banded", "bucket_pfx", "band", "bucket", "bpfx",
+                       "bands")
+    _PAYLOAD = _Layout("sigs", "sig_pfx")
+
     def __init__(
         self,
         spark: SparkSession,
@@ -100,8 +672,6 @@ class BandedSignatureStore:
         sig_pfx: int = 32,
         bucket_pfx: int = 32,
     ):
-        self.spark = spark
-        self.root = root
         self.id_col = id_col
         self.text_col = text_col
         self.n = n
@@ -109,154 +679,37 @@ class BandedSignatureStore:
         self.bands = bands
         self.sig_pfx = sig_pfx
         self.bucket_pfx = bucket_pfx
-        self._sigs = os.path.join(root, "sigs")
-        self._banded = os.path.join(root, "banded")
-        self._check_meta()
-        # heal staging dirs left by a crashed commit (replay re-stages)
-        for d in glob.glob(os.path.join(root, ".stage-*")):
-            shutil.rmtree(d, ignore_errors=True)
-        # heal a crashed compact(): its swap window is rename(base ->
-        # aside) then rename(stage -> base) — dying between the two
-        # leaves the live dir MISSING with the aside holding the only
-        # copy. Restore the aside when base is gone; staged compacts
-        # are garbage either way (a rerun re-stages).
-        for base in (self._banded, self._sigs):
-            asides = sorted(glob.glob(base + ".old-*"))
-            if not os.path.isdir(base) and asides:
-                os.rename(asides.pop(0), base)
-            for d in asides:
-                shutil.rmtree(d, ignore_errors=True)
-            for d in glob.glob(base + ".compact-*"):
-                shutil.rmtree(d, ignore_errors=True)
-        # per-layout moduli win over everything (see _check_meta):
-        # each layout dir carries the modulus its hive values were
-        # computed under, so a crash between compact()'s two layout
-        # swaps (banded migrated, sigs not yet) still reads BOTH
-        # layouts under their true moduli. Read AFTER healing — the
-        # layout file rides inside the dir the heal may restore.
-        lb = _read_layout(self._banded)
-        if lb is not None:
-            self.bucket_pfx = int(lb["bucket_pfx"])
-        ls = _read_layout(self._sigs)
-        if ls is not None:
-            self.sig_pfx = int(ls["sig_pfx"])
+        super().__init__(spark, root)
 
-    # ---------------------------------------------------------- meta
-    def _meta_dict(self) -> dict:
-        return {
-            "layout": _LAYOUT_VERSION,
-            "n": self.n,
-            "num_hashes": self.num_hashes,
-            "bands": self.bands,
-            "sig_pfx": self.sig_pfx,
-            "bucket_pfx": self.bucket_pfx,
-        }
+    @property
+    def _key(self) -> str:
+        return self.id_col
 
-    # params whose mismatch means the persisted state is semantically
-    # incompatible with this handle: probing across them silently
-    # misses duplicates, so they raise. The prefix MODULI are not in
-    # this set — they are pure layout, adopted from the store (only
-    # compact() may change them, rewriting every file under the new
-    # scheme), so a default-constructed handle keeps working on a
-    # store that has grown its partitioning.
-    _STRUCTURAL = ("layout", "n", "num_hashes", "bands")
+    def _payload_cols(self) -> list[str]:
+        return [self.id_col] + [f"mh_{i}" for i in range(self.num_hashes)]
 
-    def _check_meta(self) -> None:
-        mp = os.path.join(self.root, _META)
-        if os.path.exists(mp):
-            with open(mp) as fh:
-                have = json.load(fh)
-            mine = self._meta_dict()
-            if any(have.get(k) != mine[k] for k in self._STRUCTURAL):
-                raise ValueError(
-                    "signature store %s was built with %r, opened "
-                    "with %r — banding params are structural; rebuild "
-                    "the store instead of probing across them"
-                    % (self.root, have, mine)
-                )
-            # adopt the store's layout moduli (per-layout _layout.json
-            # files override these again in __init__)
-            if "sig_pfx" in have:
-                self.sig_pfx = int(have["sig_pfx"])
-            if "bucket_pfx" in have:
-                self.bucket_pfx = int(have["bucket_pfx"])
-
-    def _write_meta(self) -> None:
-        mp = os.path.join(self.root, _META)
-        if os.path.exists(mp):
-            return
-        os.makedirs(self.root, exist_ok=True)
-        tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._meta_dict(), fh)
-        os.rename(tmp, mp)
-
-    def _rewrite_meta(self) -> None:
-        """Atomic in-place meta replace — ONLY compact() may call this
-        (a migration rewrote every file, so the new moduli describe
-        the store truthfully)."""
-        mp = os.path.join(self.root, _META)
-        tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._meta_dict(), fh)
-        os.rename(tmp, mp)
-
-    # -------------------------------------------------------- layout
-    def exists(self) -> bool:
-        return _dir_has_parquet(self._sigs)
-
-    def _pfx_expr(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.sig_pfx))
-
-    def _sig_dirs(self, prefixes: list[int] | None) -> list[str]:
-        return _partition_dirs(self._sigs, {"pfx": prefixes})
-
-    def _banded_dirs(self, pairs: set[tuple[int, int]] | None) -> list[str]:
-        dirs = []
-        for band_dir in sorted(glob.glob(os.path.join(self._banded, "band=*"))):
-            band = int(os.path.basename(band_dir).split("=", 1)[1])
-            for pd in sorted(glob.glob(os.path.join(band_dir, "bpfx=*"))):
-                bpfx = int(os.path.basename(pd).split("=", 1)[1])
-                if pairs is None or (band, bpfx) in pairs:
-                    dirs.append(pd)
-        return dirs
-
-    def _read(self, base: str, dirs: list[str], like: DataFrame,
-              cols: list[str]) -> DataFrame:
-        """Read the selected partition dirs (basePath keeps partition
-        columns parsing); empty selection -> typed empty frame."""
-        dirs = [d for d in dirs if _dir_has_parquet(d)]
-        if not dirs:
-            return like.select(*cols).limit(0)
-        return (
-            self.spark.read.option("basePath", base)
-            .parquet(*dirs)
-            .select(*cols)
+    def _bucket_rows(self, df: DataFrame) -> DataFrame:
+        """(id, band, bucket): one row per band of each signature."""
+        from data_engineering_pipeline_spark.operators.dedup import (
+            _band_rows,
+            _band_structs,
         )
 
-    # --------------------------------------------------------- probe
-    def seen_ids(self, ids: DataFrame) -> DataFrame:
-        """Store ids restricted to the prefixes of `ids` — the pruned
-        form of `existing.select(id_col)` for anti-joins. Any store id
-        equal to a probe id shares its prefix, so the restriction is
-        exact."""
-        if not self.exists():
-            return ids.select(self.id_col).limit(0)
-        if self.sig_pfx == 1:
-            # one prefix dir: the collect could only ever return {0} —
-            # skip the extra driver job and read the single dir
-            pfx = None
-        else:
-            pfx = sorted(
-                r[0]
-                for r in ids.select(
-                    self._pfx_expr(F.col(self.id_col)).alias("p")
-                ).distinct().collect()
-            )
-        return self._read(
-            self._sigs, self._sig_dirs(pfx), ids.select(self.id_col),
-            [self.id_col],
+        band_cols = _band_structs(
+            self.bands, _band_rows(self.num_hashes, self.bands)
         )
+        return df.select(
+            F.col(self.id_col),
+            F.explode(F.array(*band_cols)).alias("bb"),
+        ).select(
+            self.id_col,
+            F.col("bb.band").alias("band"),
+            F.col("bb.bucket").alias("bucket"),
+        )
+
+    def _flat_rows(self, df: DataFrame) -> DataFrame:
+        mh = [c for c in df.columns if c.startswith("mh_")]
+        return df.select(self.id_col, *mh)
 
     def probe(
         self,
@@ -278,7 +731,7 @@ class BandedSignatureStore:
         same arrays) and is used in its place — the caller that also
         needs the batch's shingle sets (an exact-verify arm, say)
         computes them ONCE and both consumers share the pass
-        (r14: parity pinned by test_probe_precomputed_shingles_parity).
+        (parity pinned by test_probe_precomputed_shingles_parity).
 
         `max_bucket_size` (off by default — results exactly match the
         graded oracle) bounds the one term of probe cost that is NOT
@@ -302,371 +755,41 @@ class BandedSignatureStore:
         skipped. Costs one extra shuffle of the PRUNED slim scan (the
         per-bucket rank window) — paid only when the cap is on."""
         from data_engineering_pipeline_spark.operators.dedup import (
-            _band_rows,
-            _band_structs,
             minhash_signature,
             shingle_sets,
         )
 
-        id_col = self.id_col
-        rows = _band_rows(self.num_hashes, self.bands)
-        band_cols = _band_structs(self.bands, rows)
-        mh_cols = [f"mh_{i}" for i in range(self.num_hashes)]
-
         if shingles is None:
-            shingles = shingle_sets(new_docs, id_col, self.text_col, self.n)
+            shingles = shingle_sets(
+                new_docs, self.id_col, self.text_col, self.n
+            )
         # checkpoint the batch signatures ONCE: sig feeds the fresh
         # anti-join, the banding, the verify lookup AND the caller's
         # commit — without the checkpoint every one of those actions
         # re-runs the tokenize+shingle+minhash chain (and the caller's
-        # whole new_docs lineage above it); the r11 500k probe
+        # whole new_docs lineage above it); a 500k-doc probe
         # measured that recomputation as the dominant wall. The
-        # exploded+aggregate form ON PURPOSE (r14 A/B): the map-only
-        # array-expression form (minhash_signature_arrays) would keep
-        # this checkpoint lazy under AQE — no serial job here — but
-        # higher-order array functions are CodegenFallback
-        # (interpreted), and the interleaved probe-form A/B read the
-        # array variant 1.30x SLOWER on the corpus-sized graded
-        # batches (5.74/6.41 vs 4.67/4.66 s): the codegen'd aggregate
-        # beats the saved driver job.
+        # exploded+aggregate form ON PURPOSE: an array-expression form
+        # would keep this checkpoint lazy (no serial job here) but
+        # measured 1.30x slower, its higher-order functions running
+        # interpreted (CodegenFallback).
         ex = shingles.select(
-            F.col(id_col), F.explode("shingles").alias("shingle")
+            F.col(self.id_col), F.explode("shingles").alias("shingle")
         )
-        sig = minhash_signature(ex, id_col, self.num_hashes).localCheckpoint(
-            eager=False
+        sig = minhash_signature(
+            ex, self.id_col, self.num_hashes
+        ).localCheckpoint(eager=False)
+
+        def est_jaccard(a, b):
+            matches = F.lit(0)
+            for c in self._payload_cols()[1:]:
+                matches = matches + F.when(a(c) == b(c), 1).otherwise(0)
+            return matches / F.lit(self.num_hashes)
+
+        return self._probe(
+            sig, self._bucket_rows, est_jaccard, "est_jaccard", threshold,
+            assume_fresh, max_bucket_size, stats,
         )
-        if assume_fresh or not self.exists():
-            fresh_sig = sig
-        else:
-            # no broadcast hint: the seen side is pruned-store-sized
-            # (batch-sized only when prefixes are selective) — AQE
-            # picks the strategy from the pruned size at runtime
-            fresh_sig = sig.join(
-                self.seen_ids(sig.select(id_col)), id_col, "left_anti"
-            ).localCheckpoint(eager=False)
-
-        def banded(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col(id_col),
-                F.explode(F.array(*band_cols)).alias("bb"),
-            ).select(
-                id_col,
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
-
-        # the batch's band buckets name the ONLY store partitions a
-        # candidate can live in: bpfx is a pure function of bucket and
-        # the join requires bucket equality. The touched-dirs collect is
-        # skipped when it cannot prune anything: on an EMPTY store there
-        # are no dirs, and at bucket_pfx == 1 every doc emits every band
-        # (one bpfx each), so any non-empty batch touches every dir and
-        # the collect is a constant (an empty batch then reads dirs the
-        # bucket-equality join immediately drops — harmless, and only
-        # reachable in the modulus-1 graded mini-config). Skipping it
-        # also lets batch_banded stay lazy: its only other consumer is
-        # the candidate self-join, and under AQE a localCheckpoint
-        # materializes the plan at call time (one serial driver job
-        # saved per probe).
-        batch_banded = banded(sig)
-        if self.exists() and self.bucket_pfx > 1:
-            batch_banded = batch_banded.localCheckpoint(eager=False)
-            touched = {
-                (r["band"], r["bp"])
-                for r in batch_banded.select(
-                    "band",
-                    F.pmod(
-                        F.col("bucket"), F.lit(self.bucket_pfx)
-                    ).alias("bp"),
-                ).distinct().collect()
-            }
-        else:
-            touched = None if self.exists() else set()
-        sel = self._banded_dirs(touched)
-        if stats is not None:
-            allb = self._banded_dirs(None)
-            stats["banded_dirs_opened"] = len(
-                [d for d in sel if _dir_has_parquet(d)]
-            )
-            stats["banded_dirs_total"] = len(allb)
-            stats["banded_files_opened"] = sum(
-                _n_parquet(d) for d in sel
-            )
-            stats["banded_files_total"] = sum(
-                _n_parquet(d) for d in allb
-            )
-        store_banded = self._read(
-            self._banded, sel, batch_banded, [id_col, "band", "bucket"]
-        )
-        # store rows outside the touched buckets can never satisfy the
-        # bucket-equality join — the pruned union is exact
-        all_banded = store_banded.unionByName(banded(fresh_sig))
-        if max_bucket_size is not None:
-            # bucket population is judged on the CORPUS view (store
-            # rows in the touched partitions + this batch's fresh
-            # rows): the flood lives there. Keep the cap SMALLEST ids
-            # per bucket — the canonical representatives under the
-            # keep-lowest-id survivor rule (see docstring).
-            if stats is not None:
-                stats["capped_buckets"] = (
-                    all_banded.groupBy("band", "bucket")
-                    .agg(F.count(F.lit(1)).alias("__bsz"))
-                    .filter(F.col("__bsz") > max_bucket_size)
-                    .count()
-                )
-            w = Window.partitionBy("band", "bucket").orderBy(id_col)
-            all_banded = (
-                all_banded.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= max_bucket_size)
-                .drop("__rk")
-            )
-        # no broadcast hint on the batch side: for a micro-batch AQE
-        # broadcasts it anyway (batch_banded is checkpointed, so its
-        # size is exact at runtime), while a bootstrap probe of a
-        # whole corpus through an empty store would otherwise
-        # driver-collect millions of banded rows into a forced
-        # broadcast (the r11 500k rebuild measured minutes for it)
-        a = batch_banded.alias("a")
-        b = all_banded.alias("b")
-        cand = (
-            a
-            .join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.least(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_a"),
-                F.greatest(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_b"),
-            )
-            .distinct()
-        )
-        # checkpoint cand ONLY when something reuses it across actions
-        # (the sigs-pruning collect below, or the stats counter). This
-        # is not an optimization nicety but load-bearing (r13): under
-        # AQE, even localCheckpoint(eager=False) materializes every
-        # shuffle stage of the plan AT CALL TIME (Dataset.toRdd builds
-        # the AQE query stages), so an unconditional checkpoint ran
-        # the full candidate join + distinct inside probe() — on a
-        # bootstrap probe of a corpus containing a template flood
-        # that is the quadratic wall, paid even when the caller never
-        # consumes the pairs (commit-only ingest).
-        # at sig_pfx == 1 the prefix collect is a constant ({0}) — skip
-        # it, which ALSO keeps cand fully lazy on stats-less probes:
-        # the candidate join then first runs inside the caller's own
-        # action instead of as a serial job here (the AQE-eager-
-        # checkpoint finding, addendum 68)
-        prune_sigs = self.exists() and self.sig_pfx > 1
-        if prune_sigs or stats is not None:
-            cand = cand.localCheckpoint(eager=False)
-        if stats is not None:
-            stats["cand_pairs"] = cand.count()
-        if self.exists():
-            if prune_sigs:
-                cand_pfx = sorted(
-                    r[0]
-                    for r in cand.select(
-                        F.explode(
-                            F.array(
-                                self._pfx_expr(F.col("id_a")),
-                                self._pfx_expr(F.col("id_b")),
-                            )
-                        ).alias("p")
-                    ).distinct().collect()
-                )
-            else:
-                cand_pfx = None
-            store_lookup = self._read(
-                self._sigs, self._sig_dirs(cand_pfx), sig,
-                [id_col] + mh_cols,
-            )
-        else:
-            # EMPTY store: the cand_pfx collect's only purpose is
-            # pruning the sigs read, and there is nothing to prune —
-            # but the collect would still MATERIALIZE the full
-            # candidate set eagerly. On a bootstrap probe whose
-            # caller never consumes the pairs (commit-only ingest of
-            # a corpus), that materialization is pure waste — and
-            # under a template flood it is the quadratic wall, paid
-            # for nothing (r13: a 20k-copy flood made the collect
-            # effectively unbounded). Keep the whole pairs plan lazy
-            # instead; callers that do consume pairs pay the
-            # candidate volume exactly once.
-            store_lookup = sig.select(id_col, *mh_cols).limit(0)
-        lookup = store_lookup.unionByName(
-            fresh_sig.select(id_col, *mh_cols)
-        )
-        sa = lookup.select(
-            F.col(id_col).alias("id_a"),
-            *[F.col(c).alias(f"__a_{c}") for c in mh_cols],
-        )
-        sb = lookup.select(
-            F.col(id_col).alias("id_b"),
-            *[F.col(c).alias(f"__b_{c}") for c in mh_cols],
-        )
-        matches = F.lit(0)
-        for c in mh_cols:
-            matches = matches + F.when(
-                F.col(f"__a_{c}") == F.col(f"__b_{c}"), 1
-            ).otherwise(0)
-        pairs = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (matches / F.lit(self.num_hashes)).alias("est_jaccard"),
-            )
-            .filter(F.col("est_jaccard") >= threshold)
-        )
-        return fresh_sig, pairs
-
-    # -------------------------------------------------------- commit
-    # per-partition-dir file count that triggers auto-compaction at
-    # the end of a commit: every commit adds ~1 file per touched dir,
-    # so an unmaintained long stream accumulates one file per batch
-    # per dir and the probe's pruned reads degrade into a
-    # small-files listing problem. 64 bounds a dir's files while
-    # keeping compaction amortized (one fold per 64 batches).
-    COMPACT_THRESHOLD = 64
-
-    def commit(self, fresh_sig: DataFrame, batch_id: int = 0) -> None:
-        """Append a batch's fresh signatures: band rows FIRST, then
-        signature rows (see module docstring for the crash order).
-        Each partition dir only ever GAINS files — O(batch) writes —
-        and when the FULLEST sigs partition dir crosses
-        COMPACT_THRESHOLD files the whole store folds to one file per
-        dir (stage + swap, crash leaves old or new set, both
-        complete)."""
-        from data_engineering_pipeline_spark.operators.dedup import (
-            _band_rows,
-            _band_structs,
-        )
-
-        self._write_meta()
-        rows = _band_rows(self.num_hashes, self.bands)
-        band_cols = _band_structs(self.bands, rows)
-        stage = os.path.join(self.root, ".stage-" + uuid.uuid4().hex)
-        b_stage = os.path.join(stage, "banded")
-        s_stage = os.path.join(stage, "sigs")
-        banded = (
-            fresh_sig.select(
-                F.col(self.id_col),
-                F.explode(F.array(*band_cols)).alias("bb"),
-            )
-            .select(
-                self.id_col,
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
-            .withColumn(
-                "bpfx", F.pmod(F.col("bucket"), F.lit(self.bucket_pfx))
-            )
-        )
-        # one file per partition dir per commit: repartition by the
-        # partition columns so a batch adds bands*bucket_pfx files,
-        # not tasks x dirs
-        sigs = fresh_sig.withColumn(
-            "pfx", self._pfx_expr(F.col(self.id_col))
-        )
-        # STAGE the two layouts concurrently (guide §2.6 — overlap
-        # independent jobs): the writes share only the checkpointed
-        # fresh_sig (concurrent first-materialization of one local
-        # checkpoint is a synchronized RDDCheckpointData path), and
-        # the crash-order contract lives in the MOVES below, which
-        # stay strictly banded-then-sigs. Staging was two serial
-        # driver jobs per commit; for a micro-batch each is mostly
-        # fixed job cost, so overlapping them cuts the commit wall
-        # by close to the smaller write.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stage_banded() -> None:
-            banded.repartition("band", "bpfx").write.partitionBy(
-                "band", "bpfx"
-            ).mode("overwrite").parquet(b_stage)
-
-        def _stage_sigs() -> None:
-            sigs.repartition("pfx").write.partitionBy("pfx").mode(
-                "overwrite"
-            ).parquet(s_stage)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(_stage_banded)
-            fs = pool.submit(_stage_sigs)
-            fb.result()
-            fs.result()
-        tok = f"{batch_id}-{uuid.uuid4().hex}"
-        if _move_partition_files(b_stage, self._banded, tok) == 0:
-            # empty batch: nothing to land (a replayed batch's fresh
-            # set is empty — no empty part-files accumulating)
-            shutil.rmtree(stage, ignore_errors=True)
-            return
-        _move_partition_files(s_stage, self._sigs, tok)
-        shutil.rmtree(stage, ignore_errors=True)
-        # stamp each live layout dir with its modulus (first commit
-        # creates the dirs; later commits are a no-op stat)
-        if _read_layout(self._banded) is None:
-            _write_layout(self._banded, {"bucket_pfx": self.bucket_pfx})
-        if _read_layout(self._sigs) is None:
-            _write_layout(self._sigs, {"sig_pfx": self.sig_pfx})
-        # trigger on the FULLEST dir, not the lexicographically first:
-        # skewed/tiny batches don't touch dirs symmetrically, so a
-        # single sampled dir can lag the real maximum by a multiple
-        # (the walk is bounded — post-compaction every dir holds one
-        # file, so this counts at most dirs x threshold files).
-        # auto_grow: the fold is also the point where the store checks
-        # whether its partition dirs have outgrown the probe-read
-        # budget and doubles the prefix moduli if so.
-        dirs = self._sig_dirs(None)
-        if dirs and max(_n_parquet(d) for d in dirs) > self.COMPACT_THRESHOLD:
-            self.compact(auto_grow=True)
-
-    # --------------------------------------------------- maintenance
-    def migrate_flat(self, flat_sigs: DataFrame, batch_id: int = 0) -> None:
-        """One-shot migration from the flat single-directory store:
-        commit the whole flat frame as one batch (anti-joined against
-        anything already migrated, so a crashed migration replays to
-        convergence)."""
-        fresh = flat_sigs
-        if self.exists():
-            fresh = flat_sigs.join(
-                self.seen_ids(flat_sigs.select(self.id_col)),
-                self.id_col,
-                "left_anti",
-            )
-        self.commit(fresh, batch_id)
-
-    # auto-grow target: compact(auto_grow=True) doubles a layout's
-    # prefix modulus until each partition dir holds at most this many
-    # bytes — the invariant that keeps a probe's read volume
-    # batch-proportional as the corpus grows (each opened dir is
-    # 1/(bands*bucket_pfx) of the store; a fixed modulus makes that
-    # slice grow linearly with the corpus, addendum 59's honest
-    # ceiling).
-    AUTO_GROW_DIR_BYTES = 8 * 1024 * 1024
-    MAX_PFX = 4096
-
-    def _grown_pfx(self, base: str, n_dirs_per_pfx: int, cur: int) -> int:
-        total = 0
-        for r, _dirs, files in os.walk(base):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(r, f))
-                    except OSError:
-                        pass
-        new = cur
-        while (
-            new < self.MAX_PFX
-            and total / (n_dirs_per_pfx * new) > self.AUTO_GROW_DIR_BYTES
-        ):
-            new *= 2
-        return new
 
     def compact(
         self,
@@ -681,90 +804,26 @@ class BandedSignatureStore:
         `to_sig_pfx` / `to_bucket_pfx` MIGRATE the store to new prefix
         moduli in the same rewrite — compact already touches every
         file, so it is the one legal point where the partitioning may
-        change (r11 VERDICT item 5: a fixed bucket_pfx caps pruning as
-        the corpus grows). `auto_grow=True` picks the moduli instead:
-        doubled until each partition dir is back under
-        AUTO_GROW_DIR_BYTES — the commit-time auto-compaction passes
-        this, so a long-running store re-partitions itself as it
-        grows. Crash-safe: each staged layout dir carries its own
+        change (a fixed bucket_pfx caps pruning as the corpus grows).
+        `auto_grow=True` picks the moduli instead: doubled until each
+        partition dir is back under AUTO_GROW_DIR_BYTES — the
+        commit-time auto-compaction passes this, so a long-running
+        store re-partitions itself as it grows. Crash-safe: each staged layout dir carries its own
         `_layout.json` (swapped atomically with the dir), so dying
         between the two layout swaps leaves banded at the new modulus
         and sigs at the old — and the next open reads each under its
         true modulus. The root _meta.json is rewritten LAST (fresh
         handles adopt it; per-layout files win until then)."""
-        new_sig = to_sig_pfx or self.sig_pfx
-        new_bucket = to_bucket_pfx or self.bucket_pfx
-        if auto_grow:
-            if _dir_has_parquet(self._banded):
-                new_bucket = max(
-                    new_bucket,
-                    self._grown_pfx(self._banded, self.bands, new_bucket),
-                )
-            if _dir_has_parquet(self._sigs):
-                new_sig = max(
-                    new_sig, self._grown_pfx(self._sigs, 1, new_sig)
-                )
-        for base in (self._banded, self._sigs):
-            if not _dir_has_parquet(base):
-                continue
-            df = self.spark.read.parquet(base)
-            if base is self._banded:
-                pcols = ["band", "bpfx"]
-                if new_bucket != self.bucket_pfx:
-                    df = df.drop("bpfx").withColumn(
-                        "bpfx",
-                        F.pmod(F.col("bucket"), F.lit(new_bucket)),
-                    )
-                layout = {"bucket_pfx": new_bucket}
-            else:
-                pcols = ["pfx"]
-                if new_sig != self.sig_pfx:
-                    df = df.drop("pfx").withColumn(
-                        "pfx",
-                        F.pmod(
-                            F.xxhash64(F.col(self.id_col)),
-                            F.lit(new_sig),
-                        ),
-                    )
-                layout = {"sig_pfx": new_sig}
-            stage = base + ".compact-" + uuid.uuid4().hex[:8]
-            df.repartition(*pcols).write.partitionBy(*pcols).mode(
-                "overwrite"
-            ).parquet(stage)
-            _write_layout(stage, layout)
-            aside = base + ".old-" + uuid.uuid4().hex[:8]
-            os.rename(base, aside)
-            os.rename(stage, base)
-            shutil.rmtree(aside, ignore_errors=True)
-        self.bucket_pfx, self.sig_pfx = new_bucket, new_sig
-        self._rewrite_meta()
+        self._compact(to_bucket_pfx, to_sig_pfx, auto_grow)
 
 
 def open_migrated(
     spark: SparkSession, root: str, **kwargs
 ) -> BandedSignatureStore:
     """Open a store at `root`, migrating a pre-bucketing FLAT layout
-    (part-files directly in the directory — streaming/sinks.py's old
-    `_append_parquet` shape and the curation pipeline's old
-    mode-append shape) in place. Crash-safe: the flat files are only
-    removed AFTER the migration commit lands; a replayed migration
-    anti-joins to a no-op."""
-    st = BandedSignatureStore(spark, root, **kwargs)
-    if not os.path.isdir(root):
-        return st
-    flat = sorted(
-        f for f in os.listdir(root) if f.endswith(".parquet")
-    )
-    if flat:
-        df = spark.read.parquet(*[os.path.join(root, f) for f in flat])
-        mh = [c for c in df.columns if c.startswith("mh_")]
-        st.migrate_flat(df.select(st.id_col, *mh))
-        for f in flat:
-            os.remove(os.path.join(root, f))
-        success = os.path.join(root, "_SUCCESS")
-        if os.path.exists(success):
-            os.remove(success)
-    return st
+    (streaming/sinks.py's old `_append_parquet` shape and the curation
+    pipeline's old mode-append shape) in place."""
+    return BandedSignatureStore(spark, root, **kwargs)._migrate_flat_files()
 
 
 def _dir_has_parquet(path: str) -> bool:
@@ -781,18 +840,6 @@ def _n_parquet(path: str) -> int:
     for _root, _dirs, files in os.walk(path):
         n += sum(1 for f in files if f.endswith(".parquet"))
     return n
-
-
-def _partition_dirs(base: str, wanted: dict) -> list[str]:
-    """List `base`'s hive partition dirs, keeping only values in
-    `wanted` ({col: list|None}); single-level layouts only."""
-    ((col, values),) = wanted.items()
-    out = []
-    for d in sorted(glob.glob(os.path.join(base, f"{col}=*"))):
-        v = int(os.path.basename(d).split("=", 1)[1])
-        if values is None or v in values:
-            out.append(d)
-    return out
 
 
 def _move_partition_files(stage: str, dest: str, tok: str) -> int:

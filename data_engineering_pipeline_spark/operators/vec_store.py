@@ -1,38 +1,27 @@
 """Bucketed hyperplane-LSH vector index store for incremental
-embedding near-dup — the embedding twin of operators/sig_store.py.
-
-The flat index (streaming/sinks.py `_append_parquet` on one directory)
-re-reads EVERY index row per micro-batch — and each row carries the
-full vector, duplicated once per hash table — so both the probe read
-and the on-disk footprint grow with the corpus (the same addendum-56
-read term the banded signature store removed for text). This store
-persists TWO pruned layouts under one root:
+embedding near-dup — the embedding subclass of the two-layout store
+skeleton in operators/sig_store.py (`_TwoLayoutStore`), which owns the
+open-time healing, meta and per-layout modulus stamps, pruned reads,
+the probe core, the staged commit with its crash order, compaction
+and flat-layout migration. Its two layouts:
 
   <root>/signed/tbl=T/spfx=NN/app-*.parquet  (__id, sig)     slim
   <root>/vecs/pfx=NN/app-*.parquet           (__id, __v, __n) 1/vector
   <root>/_meta.json                          structural params
 
 - `signed` holds the per-table hyperplane signatures ONCE, WITHOUT the
-  vectors (the flat layout ships dim doubles x n_tables per vector
-  through every probe), hive-partitioned by table and a signature
-  prefix: a batch's probe lists only the (tbl, spfx) dirs its own
-  (XOR-mask-expanded) probe signatures hash into and opens ONLY those.
-  The probe side of the candidate join is the batch (bounded:
-  rows x tables x masks), so the store side is a pruned SCAN, never a
-  shuffle.
+  vectors (the old flat index shipped dim doubles x n_tables per
+  vector through every probe); a batch's probe opens only the
+  (tbl, spfx) dirs its own XOR-mask-expanded probe signatures hash
+  into.
 - `vecs` holds ONE (vector, norm) row per id — a 1/n_tables footprint
-  vs the flat index — partitioned by an id-hash prefix so the exact
-  cosine verify fetches only the prefixes of the candidate ids.
+  vs the flat index — so the exact cosine verify fetches only the
+  candidate ids' prefixes.
 
-Append discipline, crash order, prefix-moduli migration and
-auto-compaction all reuse sig_store's machinery verbatim (the helpers
-are imported, not copied): commit moves `signed` files BEFORE `vecs`
-files — a vector row landing without its signatures would never be
-probed again (fatal), while signatures without the vector are
-re-derived on replay (the fresh anti-join is keyed on `vecs`) and the
-duplicate signed rows collapse in the candidate `distinct()`. compact()
-migrates prefix moduli with per-layout `_layout.json` stamps; the
-commit-time auto-compaction auto-grows them.
+commit moves `signed` files BEFORE `vecs` files: a vector row landing
+without its signatures would never be probed again, while signatures
+without the vector are re-derived on replay (the fresh anti-join is
+keyed on `vecs`).
 
 Pair semantics are IDENTICAL to similarity.incremental_embedding_dedup
 (same signer, same probe-mask expansion, same orientation/distinct,
@@ -42,33 +31,26 @@ parity test in tests/test_vec_store.py.
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import shutil
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_pipeline_spark.operators.sig_store import (
-    _dir_has_parquet,
-    _move_partition_files,
-    _n_parquet,
-    _partition_dirs,
-    _read_layout,
-    _write_layout,
+    _Layout,
+    _TwoLayoutStore,
 )
 
-_META = "_meta.json"
-_LAYOUT_VERSION = "vec-banded-v1"
 
-
-class VecIndexStore:
-    # same knobs/discipline as BandedSignatureStore
-    COMPACT_THRESHOLD = 64
-    AUTO_GROW_DIR_BYTES = 8 * 1024 * 1024
-    MAX_PFX = 4096
+class VecIndexStore(_TwoLayoutStore):
+    _KIND = ("vector index store", "signer params")
+    _LAYOUT_VERSION = "vec-banded-v1"
+    # signature identity: a store signed under different hyperplanes
+    # (dim/bits/n_tables feed the seeded signer) must not be probed
+    # incrementally. The prefix MODULI are layout, adopted from disk.
+    _STRUCTURAL = ("layout", "dim", "bits", "n_tables")
+    _META_KEYS = ("dim", "bits", "n_tables", "spfx", "vpfx")
+    _BUCKETS = _Layout("signed", "spfx", "tbl", "sig", "spfx", "n_tables")
+    _PAYLOAD = _Layout("vecs", "vpfx")
+    _key = "__id"
 
     def __init__(
         self,
@@ -82,8 +64,6 @@ class VecIndexStore:
         spfx: int = 32,
         vpfx: int = 32,
     ):
-        self.spark = spark
-        self.root = root
         self.id_col = id_col
         self.vec_col = vec_col
         self.dim = dim
@@ -91,129 +71,17 @@ class VecIndexStore:
         self.n_tables = n_tables
         self.spfx = spfx
         self.vpfx = vpfx
-        self._signed = os.path.join(root, "signed")
-        self._vecs = os.path.join(root, "vecs")
-        self._check_meta()
-        for d in glob.glob(os.path.join(root, ".stage-*")):
-            shutil.rmtree(d, ignore_errors=True)
-        for base in (self._signed, self._vecs):
-            asides = sorted(glob.glob(base + ".old-*"))
-            if not os.path.isdir(base) and asides:
-                os.rename(asides.pop(0), base)
-            for d in asides:
-                shutil.rmtree(d, ignore_errors=True)
-            for d in glob.glob(base + ".compact-*"):
-                shutil.rmtree(d, ignore_errors=True)
-        ls = _read_layout(self._signed)
-        if ls is not None:
-            self.spfx = int(ls["spfx"])
-        lv = _read_layout(self._vecs)
-        if lv is not None:
-            self.vpfx = int(lv["vpfx"])
+        super().__init__(spark, root)
 
-    # ---------------------------------------------------------- meta
-    # signature identity: a store signed under different hyperplanes
-    # (dim/bits/n_tables feed the seeded signer) must not be probed
-    # incrementally. The prefix MODULI are layout, adopted from disk.
-    _STRUCTURAL = ("layout", "dim", "bits", "n_tables")
+    def _payload_cols(self) -> list[str]:
+        return ["__id", "__v", "__n"]
 
-    def _meta_dict(self) -> dict:
-        return {
-            "layout": _LAYOUT_VERSION,
-            "dim": self.dim,
-            "bits": self.bits,
-            "n_tables": self.n_tables,
-            "spfx": self.spfx,
-            "vpfx": self.vpfx,
-        }
+    def _bucket_rows(self, df: DataFrame) -> DataFrame:
+        return df.select("__id", "tbl", "sig")
 
-    def _check_meta(self) -> None:
-        mp = os.path.join(self.root, _META)
-        if os.path.exists(mp):
-            with open(mp) as fh:
-                have = json.load(fh)
-            mine = self._meta_dict()
-            if any(have.get(k) != mine[k] for k in self._STRUCTURAL):
-                raise ValueError(
-                    "vector index store %s was built with %r, opened "
-                    "with %r — signer params are structural; rebuild "
-                    "the store instead of probing across them"
-                    % (self.root, have, mine)
-                )
-            if "spfx" in have:
-                self.spfx = int(have["spfx"])
-            if "vpfx" in have:
-                self.vpfx = int(have["vpfx"])
-
-    def _write_meta(self) -> None:
-        mp = os.path.join(self.root, _META)
-        if os.path.exists(mp):
-            return
-        os.makedirs(self.root, exist_ok=True)
-        tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._meta_dict(), fh)
-        os.rename(tmp, mp)
-
-    def _rewrite_meta(self) -> None:
-        mp = os.path.join(self.root, _META)
-        tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._meta_dict(), fh)
-        os.rename(tmp, mp)
-
-    # -------------------------------------------------------- layout
-    def exists(self) -> bool:
-        return _dir_has_parquet(self._vecs)
-
-    def _vpfx_expr(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.vpfx))
-
-    def _vec_dirs(self, prefixes: list[int] | None) -> list[str]:
-        return _partition_dirs(self._vecs, {"pfx": prefixes})
-
-    def _signed_dirs(self, pairs: set[tuple[int, int]] | None) -> list[str]:
-        dirs = []
-        for tdir in sorted(glob.glob(os.path.join(self._signed, "tbl=*"))):
-            tbl = int(os.path.basename(tdir).split("=", 1)[1])
-            for pd in sorted(glob.glob(os.path.join(tdir, "spfx=*"))):
-                sp = int(os.path.basename(pd).split("=", 1)[1])
-                if pairs is None or (tbl, sp) in pairs:
-                    dirs.append(pd)
-        return dirs
-
-    def _read(self, base: str, dirs: list[str], like: DataFrame,
-              cols: list[str]) -> DataFrame:
-        dirs = [d for d in dirs if _dir_has_parquet(d)]
-        if not dirs:
-            return like.select(*cols).limit(0)
-        return (
-            self.spark.read.option("basePath", base)
-            .parquet(*dirs)
-            .select(*cols)
-        )
-
-    # --------------------------------------------------------- probe
-    def seen_ids(self, ids: DataFrame) -> DataFrame:
-        """Store ids restricted to the prefixes of `ids` — exact for
-        equality anti-joins (a store id equal to a probe id shares its
-        prefix)."""
-        if not self.exists():
-            return ids.select("__id").limit(0)
-        if self.vpfx == 1:
-            # one prefix dir: the collect could only ever return {0} —
-            # skip the extra driver job and read the single dir
-            pfx = None
-        else:
-            pfx = sorted(
-                r[0]
-                for r in ids.select(
-                    self._vpfx_expr(F.col("__id")).alias("p")
-                ).distinct().collect()
-            )
-        return self._read(
-            self._vecs, self._vec_dirs(pfx), ids.select("__id"), ["__id"]
-        )
+    def _payload_rows(self, df: DataFrame) -> DataFrame:
+        # index rows repeat the vector once per table: keep table 0's
+        return df.filter(F.col("tbl") == 0).select(*self._payload_cols())
 
     def probe(
         self,
@@ -252,224 +120,28 @@ class VecIndexStore:
             new_vecs, self.id_col, self.vec_col,
             self.dim, self.bits, self.n_tables,
         ).localCheckpoint(eager=False)
-        if assume_fresh or not self.exists():
-            fresh_idx = new_idx
-        else:
-            fresh_idx = new_idx.join(
-                self.seen_ids(new_idx.select("__id")), "__id", "left_anti"
-            ).localCheckpoint(eager=False)
-
         masks = _probe_masks(self.bits, probe_radius)
-        probed = new_idx.select(
-            "__id", "tbl",
-            F.explode(F.array(*[F.lit(m) for m in masks])).alias("__m"),
-            F.col("sig").alias("__sig0"),
-        ).select(
-            "__id", "tbl",
-            F.col("__sig0").bitwiseXOR(F.col("__m")).alias("sig"),
-        )
 
-        # the batch's probe signatures name the ONLY store partitions a
-        # collision can live in: spfx is a pure function of sig and the
-        # join requires (tbl, sig) equality. The touched-dirs collect
-        # is skipped when it cannot prune: on an EMPTY store there are
-        # no dirs, and at spfx == 1 each table has one dir every
-        # non-empty batch touches — the collect is a constant. Skipping
-        # it also keeps `probed` lazy (its only other consumer is the
-        # candidate join; an AQE localCheckpoint would materialize it
-        # as a serial driver job — sig_store.probe, same finding).
-        if self.exists() and self.spfx > 1:
-            probed = probed.localCheckpoint(eager=False)
-            touched = {
-                (r["tbl"], r["sp"])
-                for r in probed.select(
-                    "tbl",
-                    F.pmod(F.col("sig"), F.lit(self.spfx)).alias("sp"),
-                ).distinct().collect()
-            }
-        else:
-            touched = None if self.exists() else set()
-        sel = self._signed_dirs(touched)
-        if stats is not None:
-            alls = self._signed_dirs(None)
-            stats["signed_dirs_opened"] = len(
-                [d for d in sel if _dir_has_parquet(d)]
+        def probed(df: DataFrame) -> DataFrame:
+            return df.select(
+                "__id", "tbl",
+                F.explode(F.array(*[F.lit(m) for m in masks])).alias("__m"),
+                F.col("sig").alias("__sig0"),
+            ).select(
+                "__id", "tbl",
+                F.col("__sig0").bitwiseXOR(F.col("__m")).alias("sig"),
             )
-            stats["signed_dirs_total"] = len(alls)
-            stats["signed_files_opened"] = sum(_n_parquet(d) for d in sel)
-            stats["signed_files_total"] = sum(_n_parquet(d) for d in alls)
-        store_signed = self._read(
-            self._signed, sel, new_idx, ["__id", "tbl", "sig"]
-        )
-        all_signed = store_signed.unionByName(
-            fresh_idx.select("__id", "tbl", "sig")
-        )
-        if max_bucket_size is not None:
-            if stats is not None:
-                stats["capped_buckets"] = (
-                    all_signed.groupBy("tbl", "sig")
-                    .agg(F.count(F.lit(1)).alias("__bsz"))
-                    .filter(F.col("__bsz") > max_bucket_size)
-                    .count()
-                )
-            w = Window.partitionBy("tbl", "sig").orderBy("__id")
-            all_signed = (
-                all_signed.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= max_bucket_size)
-                .drop("__rk")
+
+        def cos_sim(a, b):
+            return F.round(
+                cosine_ratio(dot(a("__v"), b("__v")), a("__n") * b("__n")),
+                scale,
             )
-        a = probed.alias("a")
-        b = all_signed.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.tbl") == F.col("b.tbl"))
-                & (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.__id") != F.col("b.__id")),
-            )
-            .select(
-                F.least(F.col("a.__id"), F.col("b.__id")).alias("id_a"),
-                F.greatest(F.col("a.__id"), F.col("b.__id")).alias("id_b"),
-            )
-            .distinct()
-        )
-        # checkpoint only when reused across actions — under AQE even
-        # a lazy localCheckpoint materializes the plan's shuffle
-        # stages at call time (sig_store.probe, same r13 finding), so
-        # an unconditional checkpoint would execute the candidate
-        # join inside probe() even for commit-only bootstraps
-        # at vpfx == 1 the prefix collect is a constant ({0}) — skip
-        # it, which ALSO keeps cand fully lazy on stats-less probes
-        # (the candidate join then first runs inside the caller's own
-        # action instead of as a serial job here)
-        prune_vecs = self.exists() and self.vpfx > 1
-        if prune_vecs or stats is not None:
-            cand = cand.localCheckpoint(eager=False)
-        if stats is not None:
-            stats["cand_pairs"] = cand.count()
-        if self.exists():
-            if prune_vecs:
-                cand_pfx = sorted(
-                    r[0]
-                    for r in cand.select(
-                        F.explode(
-                            F.array(
-                                self._vpfx_expr(F.col("id_a")),
-                                self._vpfx_expr(F.col("id_b")),
-                            )
-                        ).alias("p")
-                    ).distinct().collect()
-                )
-            else:
-                cand_pfx = None
-            store_base = self._read(
-                self._vecs, self._vec_dirs(cand_pfx), new_idx,
-                ["__id", "__v", "__n"],
-            )
-        else:
-            # empty store: skip the cand_pfx collect — it exists only
-            # to prune the vecs read, and eagerly materializing the
-            # candidate set on a bootstrap whose caller may never
-            # consume the pairs is the quadratic-flood trap
-            # (sig_store.probe, same guard)
-            store_base = new_idx.select("__id", "__v", "__n").limit(0)
-        base = store_base.unionByName(
-            fresh_idx.filter(F.col("tbl") == 0).select("__id", "__v", "__n")
-        )
-        va = base.select(
-            F.col("__id").alias("id_a"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        )
-        vb = base.select(
-            F.col("__id").alias("id_b"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        )
-        sim = F.round(
-            cosine_ratio(dot(F.col("__va"), F.col("__vb")),
-                         F.col("__na") * F.col("__nb")),
-            scale,
-        )
-        pairs = (
-            cand.join(va, "id_a")
-            .join(vb, "id_b")
-            .select("id_a", "id_b", sim.alias("cos_sim"))
-            .filter(F.col("cos_sim") >= threshold)
-        )
-        return fresh_idx, pairs
 
-    # -------------------------------------------------------- commit
-    def commit(self, fresh_idx: DataFrame, batch_id: int = 0) -> None:
-        """Append a batch's fresh index rows: signed slims FIRST, then
-        the one-per-vector rows (see module docstring for the crash
-        order). O(batch) file moves; auto-compacts (and auto-grows the
-        prefix moduli) when the fullest vecs dir crosses the
-        threshold."""
-        self._write_meta()
-        stage = os.path.join(self.root, ".stage-" + uuid.uuid4().hex)
-        s_stage = os.path.join(stage, "signed")
-        v_stage = os.path.join(stage, "vecs")
-        signed = fresh_idx.select(
-            "__id", "tbl", "sig",
-            F.pmod(F.col("sig"), F.lit(self.spfx)).alias("spfx"),
+        return self._probe(
+            new_idx, probed, cos_sim, "cos_sim", threshold, assume_fresh,
+            max_bucket_size, stats,
         )
-        vecs = fresh_idx.filter(F.col("tbl") == 0).select(
-            "__id", "__v", "__n",
-            self._vpfx_expr(F.col("__id")).alias("pfx"),
-        )
-        # STAGE the two layouts concurrently (guide §2.6, the
-        # sig_store r14 move): independent write jobs over the same
-        # checkpointed fresh frame; the crash-order contract lives in
-        # the MOVES below, which stay strictly signed-then-vecs.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stage_signed() -> None:
-            signed.repartition("tbl", "spfx").write.partitionBy(
-                "tbl", "spfx"
-            ).mode("overwrite").parquet(s_stage)
-
-        def _stage_vecs() -> None:
-            vecs.repartition("pfx").write.partitionBy("pfx").mode(
-                "overwrite"
-            ).parquet(v_stage)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs = pool.submit(_stage_signed)
-            fv = pool.submit(_stage_vecs)
-            fs.result()
-            fv.result()
-        tok = f"{batch_id}-{uuid.uuid4().hex}"
-        if _move_partition_files(s_stage, self._signed, tok) == 0:
-            shutil.rmtree(stage, ignore_errors=True)
-            return
-        _move_partition_files(v_stage, self._vecs, tok)
-        shutil.rmtree(stage, ignore_errors=True)
-        if _read_layout(self._signed) is None:
-            _write_layout(self._signed, {"spfx": self.spfx})
-        if _read_layout(self._vecs) is None:
-            _write_layout(self._vecs, {"vpfx": self.vpfx})
-        dirs = self._vec_dirs(None)
-        if dirs and max(_n_parquet(d) for d in dirs) > self.COMPACT_THRESHOLD:
-            self.compact(auto_grow=True)
-
-    # --------------------------------------------------- maintenance
-    def _grown_pfx(self, base: str, n_dirs_per_pfx: int, cur: int) -> int:
-        total = 0
-        for r, _dirs, files in os.walk(base):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(r, f))
-                    except OSError:
-                        pass
-        new = cur
-        while (
-            new < self.MAX_PFX
-            and total / (n_dirs_per_pfx * new) > self.AUTO_GROW_DIR_BYTES
-        ):
-            new *= 2
-        return new
 
     def compact(
         self,
@@ -478,51 +150,10 @@ class VecIndexStore:
         auto_grow: bool = False,
     ) -> None:
         """Fold per-batch files to one per dir; optionally migrate the
-        prefix moduli in the same rewrite — identical crash contract to
-        sig_store.compact (per-layout _layout.json swapped atomically
-        with each dir; root meta rewritten last)."""
-        new_spfx = to_spfx or self.spfx
-        new_vpfx = to_vpfx or self.vpfx
-        if auto_grow:
-            if _dir_has_parquet(self._signed):
-                new_spfx = max(
-                    new_spfx,
-                    self._grown_pfx(self._signed, self.n_tables, new_spfx),
-                )
-            if _dir_has_parquet(self._vecs):
-                new_vpfx = max(
-                    new_vpfx, self._grown_pfx(self._vecs, 1, new_vpfx)
-                )
-        for base in (self._signed, self._vecs):
-            if not _dir_has_parquet(base):
-                continue
-            df = self.spark.read.parquet(base)
-            if base is self._signed:
-                pcols = ["tbl", "spfx"]
-                if new_spfx != self.spfx:
-                    df = df.drop("spfx").withColumn(
-                        "spfx", F.pmod(F.col("sig"), F.lit(new_spfx))
-                    )
-                layout = {"spfx": new_spfx}
-            else:
-                pcols = ["pfx"]
-                if new_vpfx != self.vpfx:
-                    df = df.drop("pfx").withColumn(
-                        "pfx",
-                        F.pmod(F.xxhash64(F.col("__id")), F.lit(new_vpfx)),
-                    )
-                layout = {"vpfx": new_vpfx}
-            stage = base + ".compact-" + uuid.uuid4().hex[:8]
-            df.repartition(*pcols).write.partitionBy(*pcols).mode(
-                "overwrite"
-            ).parquet(stage)
-            _write_layout(stage, layout)
-            aside = base + ".old-" + uuid.uuid4().hex[:8]
-            os.rename(base, aside)
-            os.rename(stage, base)
-            shutil.rmtree(aside, ignore_errors=True)
-        self.spfx, self.vpfx = new_spfx, new_vpfx
-        self._rewrite_meta()
+        prefix moduli in the same rewrite — BandedSignatureStore.compact
+        (per-layout _layout.json swapped atomically with each dir; root
+        meta rewritten last)."""
+        self._compact(to_spfx, to_vpfx, auto_grow)
 
 
 def open_migrated(
@@ -530,25 +161,5 @@ def open_migrated(
 ) -> VecIndexStore:
     """Open a store at `root`, migrating a FLAT index layout
     (part-files of embedding_index rows directly in the directory —
-    streaming/sinks.py's pre-r12 `_append_parquet` shape) in place.
-    Crash-safe like sig_store.open_migrated: flat files are removed
-    only AFTER the migration commit lands; a replayed migration
-    anti-joins to a no-op."""
-    st = VecIndexStore(spark, root, **kwargs)
-    if not os.path.isdir(root):
-        return st
-    flat = sorted(f for f in os.listdir(root) if f.endswith(".parquet"))
-    if flat:
-        df = spark.read.parquet(*[os.path.join(root, f) for f in flat])
-        fresh = df
-        if st.exists():
-            fresh = df.join(
-                st.seen_ids(df.select("__id")), "__id", "left_anti"
-            )
-        st.commit(fresh, 0)
-        for f in flat:
-            os.remove(os.path.join(root, f))
-        success = os.path.join(root, "_SUCCESS")
-        if os.path.exists(success):
-            os.remove(success)
-    return st
+    streaming/sinks.py's old `_append_parquet` shape) in place."""
+    return VecIndexStore(spark, root, **kwargs)._migrate_flat_files()

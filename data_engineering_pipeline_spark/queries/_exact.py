@@ -58,23 +58,3 @@ def mean_int_round4(col: str, divisor: int = 1) -> Column:
         10000.0
     )
 
-
-def mean_money_round4_sql(
-    col: str, divisor: int = 1, typ: str = "DECIMAL(12,2)"
-) -> str:
-    """DuckDB mirror of mean_money_round4 (sum cast from HUGEINT back to
-    BIGINT so the division sees the same int64 the Spark side does)."""
-    s = f"CAST(sum(CAST(CAST({col} AS {typ}) * 100 AS BIGINT)) AS BIGINT)"
-    return (
-        f"floor(({s} * 200 + count(*) * {divisor})"
-        f" / (count(*) * {2 * divisor})) / 10000.0"
-    )
-
-
-def mean_int_round4_sql(col: str, divisor: int = 1) -> str:
-    """DuckDB mirror of mean_int_round4."""
-    s = f"CAST(sum(CAST({col} AS BIGINT)) AS BIGINT)"
-    return (
-        f"floor(({s} * 20000 + count(*) * {divisor})"
-        f" / (count(*) * {2 * divisor})) / 10000.0"
-    )

@@ -34,10 +34,6 @@ ORACLES = {}
 
 JACCARD_THRESHOLD = 0.7
 
-# dedup-incremental-store: the last run's sub-wall decomposition for
-# bench probes.
-INCREMENTAL_STORE_TIMINGS: dict[str, float] = {}
-
 
 def _register(name: str, oracle: str | None = None):
     def deco(fn):
@@ -815,11 +811,8 @@ def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-run temp dir (fresh_tmpdir: prior runs' dirs are swept on the
     NEXT invocation — sweeping at return would pull the store out from
     under the still-lazy result frame); probes are pure functions of
-    the input, so the driver's repeated executions are independent.
-    Sub-walls land in INCREMENTAL_STORE_TIMINGS for bench
-    decomposition (the r11 verdict asked where the 10 s goes)."""
+    the input, so repeated executions are independent."""
     import os
-    import time
 
     from data_engineering_pipeline_spark._tmpdirs import fresh_tmpdir
     from data_engineering_pipeline_spark.operators.dedup import (
@@ -868,12 +861,9 @@ def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(root, "st"), bands=16,
         sig_pfx=1, bucket_pfx=1,
     )
-    t0 = time.perf_counter()
     # all candidates; verify below
     f1, p1 = st.probe(b1, threshold=0.0, shingles=sets1)
-    t1 = time.perf_counter()
     st.commit(f1, 1)
-    t2 = time.perf_counter()
     # assume_fresh: b2 is docs MINUS b1 by construction and the store
     # holds exactly b1, so the seen-ids anti-join could never remove a
     # row — the caller-already-deduped contract the flag exists for
@@ -883,13 +873,6 @@ def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-prefix close-out witness.
     _, p2 = st.probe(
         b2, threshold=0.0, assume_fresh=True, shingles=sets2
-    )
-    t3 = time.perf_counter()
-    INCREMENTAL_STORE_TIMINGS.clear()
-    INCREMENTAL_STORE_TIMINGS.update(
-        probe1=round(t1 - t0, 4),
-        commit1=round(t2 - t1, 4),
-        probe2=round(t3 - t2, 4),
     )
     cand = (
         p1.select("id_a", "id_b")

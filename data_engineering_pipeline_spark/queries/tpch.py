@@ -67,11 +67,6 @@ DISC_PRICE_SQL = (
 )
 
 
-def _money_sum_sql(expr: str) -> str:
-    return f"CAST(round(sum({expr}), 2) AS DOUBLE)"
-
-
-
 def _register(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = fn

@@ -554,29 +554,3 @@ def test_decontaminate_spans_null_text_clean_is_empty(spark):
     assert got[2].n_contam_windows == 0
     assert got[1].clean_text == "alpha"
 
-
-def test_minhash_array_form_matches_exploded(spark, sf_correct):
-    """r14: minhash_signature_arrays (map-only array expressions, no
-    explode+aggregate shuffle) must be BIT-IDENTICAL to the exploded
-    reference aggregate on the real corpus — same ids, same K minhash
-    values. The banding, stores and every LSH query sit on top of
-    these values, so this parity is the whole optimization's license."""
-    from data_engineering_pipeline_spark.operators.dedup import (
-        minhash_signature,
-        minhash_signature_arrays,
-        shingle_sets,
-    )
-
-    docs = load_table(spark, sf_correct, "documents")
-    sets = shingle_sets(docs, "doc_id", "text", 3)
-    ref = minhash_signature(
-        sets.select("doc_id", F.explode("shingles").alias("shingle")),
-        "doc_id",
-        32,
-    )
-    arr = minhash_signature_arrays(sets, "doc_id", 32)
-    assert arr.columns == ref.columns
-    # full-row equality both directions (null-safe): exceptAll empty
-    assert arr.exceptAll(ref).isEmpty()
-    assert ref.exceptAll(arr).isEmpty()
-    assert arr.count() == ref.count()

@@ -509,3 +509,88 @@ def test_probe_precomputed_shingles_parity(spark, tmp_path):
         b2, threshold=0.0, assume_fresh=True, shingles=sh2
     )
     assert _pairset(pp2) == _pairset(pr2)
+
+
+# ------------------------------------------------- commit fault injection
+# Both stores share one staged commit; each case runs against each
+# store: (store, batch factory, payload id column, layout dirs).
+def _store_case(kind, spark, root):
+    from data_engineering_pipeline_spark.operators.vec_store import (
+        VecIndexStore,
+    )
+    from tests.test_vec_store import CFG, _vecs
+
+    if kind == "sig":
+        return (BandedSignatureStore(spark, root),
+                lambda ids: _docs(spark, ids), "doc_id", ("banded", "sigs"))
+    return (VecIndexStore(spark, root, **CFG),
+            lambda ids: _vecs(spark, ids), "__id", ("signed", "vecs"))
+
+
+def _tree_bytes(root):
+    """Every file under `root` with its contents."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("fail", ["bucket", "payload", "both"])
+@pytest.mark.parametrize("kind", ["sig", "vec"])
+def test_failed_staging_write_leaves_no_debris(
+    spark, tmp_path, monkeypatch, kind, fail
+):
+    """A commit whose staging write(s) raise removes its own .stage-*
+    dir, surfaces every error (both, when both writes fail), and
+    leaves the live layouts byte-for-byte unchanged; replaying the
+    batch then lands it cleanly."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    root = str(tmp_path / "st")
+    st, batch, key, layouts = _store_case(kind, spark, root)
+    f1, _ = st.probe(batch(range(0, 10)))
+    st.commit(f1, 1)
+    before = _tree_bytes(root)
+
+    failing = {"bucket": layouts[:1], "payload": layouts[1:],
+               "both": layouts}[fail]
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        name = os.path.basename(path)
+        staging = os.path.basename(os.path.dirname(path)).startswith(
+            ".stage-")
+        if staging and name in failing:
+            raise RuntimeError(f"injected staging failure: {name}")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    b2 = batch(range(20, 30))
+    f2, _ = st.probe(b2)
+    if fail == "both":
+        with pytest.raises(ExceptionGroup) as ei:
+            st.commit(f2, 2)
+        assert sorted(str(e) for e in ei.value.exceptions) == sorted(
+            f"injected staging failure: {n}" for n in layouts
+        )
+    else:
+        with pytest.raises(RuntimeError, match="injected staging failure"):
+            st.commit(f2, 2)
+    assert glob.glob(os.path.join(root, ".stage-*")) == []
+    assert _tree_bytes(root) == before
+
+    # replay: the batch is still fresh and now lands
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    f2b, _ = st.probe(b2)
+    assert f2b.select(key).distinct().count() == 10
+    st.commit(f2b, 2)
+    assert glob.glob(os.path.join(root, ".stage-*")) == []
+    ids = {
+        r[0] for r in
+        spark.read.parquet(os.path.join(root, layouts[1])).select(key)
+        .collect()
+    }
+    assert ids == set(range(0, 10)) | set(range(20, 30))

@@ -7,7 +7,7 @@ for q in "$@"; do
   for i in $(seq 1 "$REPS"); do
     for t in "$A" "$B"; do
       echo "== tree=$t rep=$i q=$q"
-      (cd "$t" && python tools_r14/probe.py --runs "$RUNS" --warm 1 "$q" 2>/dev/null)
+      (cd "$t" && python tools/probe.py --runs "$RUNS" --warm 1 "$q" 2>/dev/null)
     done
   done
 done

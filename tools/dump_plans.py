@@ -1,12 +1,13 @@
-"""Dump .explain('formatted') for every registry query to plans/r14/.
+"""Dump .explain('formatted') for every registry query.
 
-Usage: python tools_r14/dump_plans.py <suffix> [name ...]
+Usage: python tools/dump_plans.py <suffix> [name ...]
   suffix: 'before' or 'after' (file name suffix)
   name:   optional subset of query names; default = whole registry.
 
-Writes plans/r14/<query>_<suffix>.txt.  Plans are captured lazily (no
-execution) except where a query's builder itself runs actions (the
-store-building queries), which is inherent to their construction.
+Writes plans/current/<query>_<suffix>.txt (git-ignored: regenerate on
+demand; plans/r13 and plans/r14 are earlier rounds' committed dumps).
+Plans are captured lazily (no execution) except where building a
+query's frame itself runs actions (the store-building queries).
 """
 
 from __future__ import annotations
@@ -14,20 +15,25 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_engineering_pipeline_spark.session import get_spark  # noqa: E402
+
+# test tables: $SPARK_GRAFT_SF_DIR, else testdata/sf0.1 beside the checkout
+SF_DIR = os.environ.get(
+    "SPARK_GRAFT_SF_DIR",
+    os.path.join(os.path.dirname(REPO), "testdata", "sf0.1"),
+)
 
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(here, "plans", "r14")
+    out_dir = os.path.join(REPO, "plans", "current")
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(app_name="dump-plans-r14")
+    spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     from data_engineering_pipeline_spark.queries import collect_registry
@@ -39,7 +45,7 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         try:
             spark.sparkContext.setJobDescription(f"plan:{name}")
-            df = queries[name](spark, sf_dir)
+            df = queries[name](spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"

@@ -1,9 +1,9 @@
-"""Isolated query probe (guide §1.4): time one or more registry queries
-with the noop sink (computation only, no driver funnel), fresh JVM per
+"""Isolated query probe: time one or more registry queries with the
+noop sink (computation only, nothing collected), fresh JVM per
 invocation, optional extra Spark confs, optional final-AQE-plan capture.
 
 Usage:
-  python tools_r14/probe.py [--runs N] [--warm W] [--conf k=v ...]
+  python tools/probe.py [--runs N] [--warm W] [--conf k=v ...]
          [--plan OUT.txt] [--collect] name [name ...]
 
 Prints one JSON line per query: {"name", "runs": [...], "median", "min"}.
@@ -18,9 +18,16 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_engineering_pipeline_spark.session import get_spark  # noqa: E402
+
+# test tables: $SPARK_GRAFT_SF_DIR, else testdata/sf0.1 beside the checkout
+SF_DIR = os.environ.get(
+    "SPARK_GRAFT_SF_DIR",
+    os.path.join(os.path.dirname(REPO), "testdata", "sf0.1"),
+)
 
 
 def main() -> None:
@@ -36,16 +43,15 @@ def main() -> None:
     args = ap.parse_args()
 
     extra = dict(c.split("=", 1) for c in args.conf)
-    spark = get_spark(app_name="probe-r14", extra_conf=extra or None)
+    spark = get_spark(app_name="probe", extra_conf=extra or None)
     spark.sparkContext.setLogLevel("ERROR")
 
     from data_engineering_pipeline_spark.queries import collect_registry
 
     queries, _ = collect_registry()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     def run_once(fn, name):
-        df = fn(spark, sf_dir)
+        df = fn(spark, SF_DIR)
         if args.collect:
             df.collect()
         else:
@@ -58,15 +64,15 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"probe:{name}")
         n_warm = max(args.warm, 3) if first else args.warm
         first = False
-        # build THIS query's frame unconditionally (ADVICE r13: with
+        # build THIS query's frame unconditionally (with
         # --warm 0, df otherwise still holds the previous query's
         # frame and the plan written is the wrong query's)
-        df = fn(spark, sf_dir)
+        df = fn(spark, SF_DIR)
         for _ in range(n_warm):
             df = run_once(fn, name)
         if args.plan:
             # suffix with the query name so multi-name invocations
-            # don't silently overwrite one file (ADVICE r13)
+            # don't silently overwrite one file
             base, ext = os.path.splitext(args.plan)
             plan_path = (
                 f"{base}_{name}{ext}" if len(args.names) > 1 else args.plan

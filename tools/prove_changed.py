@@ -1,8 +1,14 @@
-"""Entry-surface oracle proof for the r14-changed queries at BOTH
-sf0.001 and sf0.01 (the /verify recipe, driven from a fresh process):
-sorted rows + column names vs DuckDB, null-safe, 1e-12 float band.
+"""Entry-surface oracle proof for changed queries at BOTH sf0.001 and
+sf0.01 (__spark_entry__'s queries() against its oracle_sql(), from a
+fresh process): sorted rows + column names vs DuckDB, null-safe, 1e-12
+float band.
 
-Usage: python tools_r14/prove_changed.py [name ...]
+Usage: python tools/prove_changed.py [name ...]
+  name: default = the latest round's queries in
+        queries._CHANGED_IN_ROUND.
+Test tables are read from sf0.001/ and sf0.01/ beside
+$SPARK_GRAFT_SF_DIR, default testdata/ beside the checkout. Exits 1 on
+any mismatch.
 """
 
 from __future__ import annotations
@@ -10,31 +16,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-CHANGED = [
-    "dedup-incremental-store",
-    "dedup-minhash-lsh",
-    "dedup-keep-best",
-    "dedup-components",
-    "curation-split-leakage",
-    "search-mmr-rerank",
-    "op-snapshot-cdf",
-    "op-snapshot-cdf-mor",
-    "op-snapshot-change-feed",
-    "op-snapshot-change-feed-format",
-    "op-snapshot-clone",
-    "op-snapshot-cluster-merge",
-    "op-snapshot-incr-agg",
-    "op-snapshot-incr-agg-cdf",
-    "op-snapshot-incr-join",
-    "op-snapshot-merge",
-    "op-snapshot-merge-mor",
-    "op-snapshot-restore",
-    "op-snapshot-star-agg",
-    "op-snapshot-time-travel",
-    "op-snapshot-wap",
-]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+TESTDATA = os.path.dirname(os.environ.get(
+    "SPARK_GRAFT_SF_DIR",
+    os.path.join(os.path.dirname(REPO), "testdata", "sf0.1"),
+))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -46,14 +33,18 @@ def main() -> None:
     import duckdb
 
     import __spark_entry__ as m
+    from data_engineering_pipeline_spark.queries import _CHANGED_IN_ROUND
     from data_engineering_pipeline_spark.session import get_spark
 
-    names = sys.argv[1:] or CHANGED
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    latest = max(_CHANGED_IN_ROUND.values())
+    names = sys.argv[1:] or sorted(
+        q for q, r in _CHANGED_IN_ROUND.items() if r == latest
+    )
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs, osql = m.queries(), m.oracle_sql()
     bad = 0
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    for sf in (os.path.join(TESTDATA, s) for s in ("sf0.001", "sf0.01")):
         con = duckdb.connect()
         for t in TABLES:
             con.sql(

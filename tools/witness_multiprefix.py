@@ -1,14 +1,15 @@
-"""Multi-prefix store witness (VERDICT r13 'what's wrong' #4): the
-graded incremental-store queries run the minimal modulus-1 layout,
-which skips the production pruning collects — so this standing
-close-out witness probes a PRODUCTION-SHAPED multi-prefix store
-(sig_pfx=32, bucket_pfx=32) and prints the probe wall plus the
-file-open pruning counters, keeping regressions in the multi-prefix
-path visible round-over-round.
+"""Multi-prefix store witness: the registry's incremental-store queries
+run the minimal modulus-1 layout, which skips the production pruning
+collects — so this standing close-out witness probes a
+PRODUCTION-SHAPED multi-prefix store (sig_pfx=32, bucket_pfx=32) and
+prints the probe wall plus the file-open pruning counters, keeping
+regressions in the multi-prefix path visible round-over-round.
 
 Scenario: commit the sf0.1 src0-9 slice (the incremental-store
 query's batch 1), then probe the rest of the corpus as batch 2 with
 stats, timing probe construction + the pair collect.
+
+Usage: python tools/witness_multiprefix.py   (prints one JSON line)
 """
 
 from __future__ import annotations
@@ -18,9 +19,16 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_engineering_pipeline_spark.session import get_spark  # noqa: E402
+
+# test tables: $SPARK_GRAFT_SF_DIR, else testdata/sf0.1 beside the checkout
+SF_DIR = os.environ.get(
+    "SPARK_GRAFT_SF_DIR",
+    os.path.join(os.path.dirname(REPO), "testdata", "sf0.1"),
+)
 
 
 def main() -> None:
@@ -32,10 +40,9 @@ def main() -> None:
     )
     from data_engineering_pipeline_spark.sources import load_table
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="witness-multiprefix")
     spark.sparkContext.setLogLevel("ERROR")
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, SF_DIR, "documents")
     srcnum = F.substring("source", 4, 10).try_cast("int")
     b1 = docs.filter(srcnum < 10)
     b2 = docs.filter(srcnum.isNull() | (srcnum >= 10))
