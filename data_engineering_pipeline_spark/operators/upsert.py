@@ -12,6 +12,12 @@ idioms:
   to a temp dir then swaps, emulating the reference's commit-on-success
   scope (database.py:60-71). Single-writer, like the reference.
 
+Neither upsert re-reads what it wrote: the merged row count they return
+is observed on the write itself (`_write_counted`).
+The old side is read with the schema Spark stamped into one data file's
+footer (`read_layer`), so the read runs no schema-inference job; a table
+whose footers lack that stamp is read with inference instead.
+
 At 100 TB scale the same `merge_last_write_wins` plan is what a Delta/
 Iceberg MERGE compiles to for full-overwrite; with a partitioned layout,
 replace only affected partitions (dynamic partition overwrite).
@@ -19,12 +25,62 @@ replace only affected partitions (dynamic partition overwrite).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# the key Spark's parquet writer stamps its row schema under, in every
+# data file's footer (ParquetWriteSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema in the footer of one data file under `path`, or
+    None when there is no data file or its footer carries no Spark
+    schema. Files of one table share their schema (each upsert rewrites
+    it whole, or its touched partitions under the same schema)."""
+    import pyarrow.parquet as pq
+
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
+        for f in sorted(filenames):
+            if not f.startswith(("_", ".")) and f.endswith(".parquet"):
+                meta = pq.ParquetFile(os.path.join(dirpath, f)).metadata.metadata
+                raw = (meta or {}).get(_SPARK_ROW_METADATA)
+                return T.StructType.fromJson(json.loads(raw)) if raw else None
+    return None
+
+
+def read_layer(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without its schema-inference job: the
+    schema comes from one footer, read locally by pyarrow. Hive partition
+    columns are still discovered from the directory names and appended
+    after the data columns, as inference does. Falls back to inference
+    when no footer carries a Spark schema."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _write_counted(
+    df: DataFrame, path: str, partition_cols: list[str] | None = None
+) -> int:
+    """Overwrite `path` with `df`; return the rows written, counted by an
+    Observation on the write's own job instead of a second scan. The
+    observation is held until its metrics arrive, so no accumulator of
+    it is dropped while the job still reports."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write
+    writer = writer.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+    return obs.get["rows"]
 
 
 def merge_last_write_wins(
@@ -71,17 +127,10 @@ def upsert_parquet(
     SURVEY §4.2 default for the cleaned layer). At very large scale,
     pair it with dynamic partition overwrite to rewrite only the
     partitions the batch touches."""
-    old = spark.read.parquet(path) if os.path.exists(path) else None
+    old = read_layer(spark, path) if os.path.exists(path) else None
     merged = merge_last_write_wins(old, new, keys, order_col)
     tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-    writer = merged.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    # explicit schema: an EMPTY merged frame under partitionBy writes
-    # no data files, and schema inference over that raises — the count
-    # must come back 0, not AnalysisException
-    n = spark.read.schema(merged.schema).parquet(tmp).count()
+    n = _write_counted(merged, tmp, partition_cols)
     # Swap via rename-aside so every intermediate state still has a
     # recoverable table (the reference's transaction never loses the
     # table, database.py:60-71): old -> .__old__, tmp -> live, then
@@ -170,10 +219,7 @@ def upsert_parquet_scoped(
         # __tmp__ namespace covers the remnant.
         new_only = merge_last_write_wins(None, new, keys, order_col)
         tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-        new_only.write.mode("overwrite").partitionBy(
-            *partition_cols
-        ).parquet(tmp)
-        n = spark.read.schema(new_only.schema).parquet(tmp).count()
+        n = _write_counted(new_only, tmp, partition_cols)
         os.rename(tmp, path)
         return n
     touched = new.select(*partition_cols).distinct().collect()
@@ -186,7 +232,7 @@ def upsert_parquet_scoped(
             eq = F.col(c).eqNullSafe(F.lit(r[c]))
             clause = eq if clause is None else (clause & eq)
         pred = clause if pred is None else (pred | clause)
-    old_touched = spark.read.parquet(path).filter(pred)
+    old_touched = read_layer(spark, path).filter(pred)
     merged = merge_last_write_wins(old_touched, new, keys, order_col)
     # Stage-then-swap, partition-scoped: the merged touched partitions
     # are fully materialized to a staging dir FIRST (so the lazy read of
@@ -201,12 +247,9 @@ def upsert_parquet_scoped(
     token = uuid.uuid4().hex[:8]
     stage = f"{path}.__ptmp__{token}"
     aside = f"{path}.__pold__{token}"
-    merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
-    # count the STAGE (it holds exactly the merged touched partitions)
-    # before swapping — re-scanning the live table through the OR-of-
-    # partitions predicate after the swap costs a second pass for the
-    # identical number
-    n = spark.read.schema(merged.schema).parquet(stage).count()
+    # the stage holds exactly the merged touched partitions: the rows
+    # its write observes are the count to return
+    n = _write_counted(merged, stage, partition_cols)
     for rel in _leaf_partitions(stage):
         live_dir = os.path.join(path, rel)
         if os.path.exists(live_dir):

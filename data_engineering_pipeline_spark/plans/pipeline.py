@@ -13,10 +13,13 @@ commit-on-success/rollback-on-error DB scopes. Spark equivalents:
   the data unchanged (tested in tests/test_pipeline.py).
 
 Stages stay LAZY end-to-end: a stage returns DataFrames into the context
-and only terminal stages (writes/counts) trigger jobs, so the whole
-pipeline is one or two Spark jobs, not one per stage — the reference's
+and only terminal stages (writes/counts) trigger jobs, so the reference's
 Python/SQL process boundaries collapse into exchange boundaries inside a
-single plan (SURVEY.md §3)."""
+single plan (SURVEY.md §3). Jobs follow the plan's exchanges, not the
+stages: with AQE each shuffle or broadcast stage of a terminal action is
+its own Spark job. The reference pipelines run 5 jobs per ingest and 5
+per transform (plans/reference_pipelines.py lists where each comes
+from)."""
 
 from __future__ import annotations
 

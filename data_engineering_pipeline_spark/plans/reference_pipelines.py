@@ -11,7 +11,22 @@ Transform: read raw x2 -> inner join on (iso3, year) -> drop-null ->
 Where the reference crossed process boundaries (Python -> Postgres ->
 Python) per stage, each pipeline here is ONE lazy plan ending in a
 write; the only materialization points are the upsert writes and the
-preview/count reporting stages."""
+preview/count reporting stages. With AQE every shuffle or broadcast
+stage is its own Spark job, so an op (both ingests, then the transform)
+runs 15 jobs once the layers exist:
+
+- ingest, 5 jobs: the upsert's key shuffle and its write (2); the
+  quarantine append (1); the quarantine count, a partial and a final
+  aggregate (2). The raw count is the one the upsert observed on its
+  write, and every layer read takes its schema from a parquet footer
+  (operators/upsert.read_layer), so no read pays a schema-inference job.
+- transform, 5 jobs: the join's broadcast side (while the smaller raw
+  layer is under the broadcast threshold; above it, a shuffle of each
+  side), the shuffle for the per-country window, the upsert's key
+  shuffle and its write (4); the preview's ordered limit 10 (1). Its
+  total is the upsert's observed count.
+
+tests/test_pipeline.py pins these counts."""
 
 from __future__ import annotations
 
@@ -21,7 +36,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineering_pipeline_spark.operators.upsert import upsert_parquet
+from data_engineering_pipeline_spark.operators.upsert import (
+    read_layer,
+    upsert_parquet,
+)
 from data_engineering_pipeline_spark.operators.windows import (
     lag_feature,
     ordered_window,
@@ -59,14 +77,21 @@ def ingest_pipeline(
 
     def _write(ctx):
         n = upsert_parquet(spark, raw_path, ctx["validate"], RAW_KEYS, "fetched_at")
-        ctx["quarantine"].write.mode("append").parquet(quarantine_path)
+        # one file per load: the records arrive as an in-memory list, so
+        # the rejected share is small, and a file per input split would
+        # grow the quarantine's file count with the parallelism
+        ctx["quarantine"].coalesce(1).write.mode("append").parquet(
+            quarantine_path
+        )
         return n
 
     def _counts(ctx):
-        return {
-            "raw": spark.read.parquet(raw_path).count(),
-            "quarantined": spark.read.parquet(quarantine_path).count(),
-        }
+        # the upsert rewrites the whole raw layer: the rows its write
+        # observed are the layer's count
+        quarantined = spark.read.schema(ctx["quarantine"].schema).parquet(
+            quarantine_path
+        )
+        return {"raw": ctx["write"], "quarantined": quarantined.count()}
 
     return (
         Pipeline(f"ingest-{indicator_name}")
@@ -113,10 +138,8 @@ def transform_pipeline(spark: SparkSession, base_path: str) -> Pipeline:
 
     def _load(ctx):
         return {
-            "gdp": spark.read.parquet(os.path.join(base_path, "raw_gdp_growth")),
-            "unemp": spark.read.parquet(
-                os.path.join(base_path, "raw_unemployment")
-            ),
+            "gdp": read_layer(spark, os.path.join(base_path, "raw_gdp_growth")),
+            "unemp": read_layer(spark, os.path.join(base_path, "raw_unemployment")),
         }
 
     def _features(ctx):
@@ -128,9 +151,8 @@ def transform_pipeline(spark: SparkSession, base_path: str) -> Pipeline:
         )
 
     def _preview(ctx):
-        df = spark.read.parquet(cleaned_path)
-        top = df.orderBy("country_iso3", "year").limit(10)
-        return {"total": df.count(), "first10": top.collect()}
+        top = read_layer(spark, cleaned_path).orderBy("country_iso3", "year")
+        return {"total": ctx["write"], "first10": top.limit(10).collect()}
 
     return (
         Pipeline("transform-cleaned")

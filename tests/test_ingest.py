@@ -50,6 +50,45 @@ def test_flatten_and_validate(spark):
     assert quarantine.count() == 2
 
 
+def _row(rec=GOOD, **changed):
+    """The row `rec` (with `changed` fields) decodes to, nested structs as
+    dicts."""
+    full = {**rec, **changed}
+    return {k: full.get(k) for k in
+            ("indicator", "country", "countryiso3code", "date", "value")}
+
+
+@pytest.mark.parametrize(
+    "records, want",
+    [
+        # a JSON integer is a number: NUMERIC in the reference (database.py)
+        ([{**GOOD, "value": 3}], [_row(value=3.0)]),
+        # a non-string in a string field is stringified, as Spark's row
+        # conversion does; the year validates downstream
+        ([{**GOOD, "date": 2015}], [_row(date="2015")]),
+        ([{**GOOD, "value": "3"}], TypeError),
+        # a bool is not a number (Arrow alone would coerce it to 1.0)
+        ([{**GOOD, "value": True}], TypeError),
+        ([{**GOOD, "country": None}], [_row(country=None)]),
+        ([{k: v for k, v in GOOD.items() if k != "date"}], [_row(date=None)]),
+        ([{**GOOD, "country": {"id": "ZA"}}],
+         [_row(country={"id": "ZA", "value": None})]),
+        ([{**GOOD, "unit": "", "obs_status": "", "decimal": 1}], [_row()]),
+        ([], []),
+    ],
+    ids=["int-value", "int-date", "str-value", "bool-value", "none-struct",
+         "missing-key", "missing-nested-key", "extra-keys", "empty"],
+)
+def test_records_to_dataframe_accepted_inputs(spark, records, want):
+    """What `records_to_dataframe` accepts, and the rows it makes."""
+    if want is TypeError:
+        with pytest.raises(TypeError, match="DoubleType"):
+            records_to_dataframe(spark, records).collect()
+        return
+    got = records_to_dataframe(spark, records).collect()
+    assert [r.asDict(recursive=True) for r in got] == want
+
+
 def _page(meta_pages, records):
     return json.dumps([{"pages": meta_pages, "per_page": 1000}, records])
 

@@ -74,6 +74,45 @@ def test_ingest_transform_end_to_end_idempotent(spark, tmp_path):
     assert ("ZAF", 2005) not in rows
 
 
+def test_pipeline_job_count_pinned(spark, spark_jobs, tmp_path):
+    """Pins the Spark jobs of an op over existing layers: 5 per ingest, 5
+    per transform (plans/reference_pipelines.py lists them). The reported
+    counts and preview match the first run's, so the observed counts and
+    footer-schema reads report what the re-reads and inference did."""
+    base = str(tmp_path)
+
+    def pipelines():
+        return [
+            ingest_pipeline(spark, "gdp_growth", GDP, base, fetched_at=TS),
+            ingest_pipeline(spark, "unemployment", UNEMP, base, fetched_at=TS),
+            transform_pipeline(spark, base),
+        ]
+
+    first = {p.name: p.run() for p in pipelines()}
+    second, jobs = {}, {}
+    for p in pipelines():
+        second[p.name], jobs[p.name] = spark_jobs(p.run)
+
+    assert jobs == {
+        "ingest-gdp_growth": 5,
+        "ingest-unemployment": 5,
+        "transform-cleaned": 5,
+    }
+    for name in ("ingest-gdp_growth", "ingest-unemployment"):
+        assert first[name]["write"] == first[name]["counts"]["raw"] == 15
+        # the quarantine appends every load; these records have no rejects
+        assert second[name]["counts"] == first[name]["counts"]
+    t1, t2 = first["transform-cleaned"], second["transform-cleaned"]
+    assert t2["preview"]["total"] == t1["preview"]["total"] == 13
+    # cleaned_at stamps each run's own now(); every other column repeats
+    def preview(t):
+        rows = t["preview"]["first10"]
+        return [{**r.asDict(), "cleaned_at": None} for r in rows]
+
+    assert preview(t2) == preview(t1)
+    assert spark.read.parquet(f"{base}/cleaned_data").count() == 13
+
+
 def test_pack_greedy_rejects_null_and_negative_weights(spark):
     """r9 review: a NULL token count reached int(NaN) (cryptic crash
     mid-loop) and a NEGATIVE one silently shrank the running fill,

@@ -6,11 +6,15 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from data_engineering_pipeline_spark.operators.upsert import (
     merge_last_write_wins,
+    read_layer,
     upsert_parquet,
+    upsert_parquet_scoped,
 )
 
 
@@ -322,8 +326,8 @@ def test_scoped_bootstrap_stages_and_empty_batch(spark, tmp_path):
 
 def test_upsert_parquet_empty_new_fresh_table(spark, tmp_path):
     """Empty new + no existing table: the partitioned empty write has
-    no data files; the count must come back 0 via the explicit-schema
-    read, not raise on schema inference."""
+    no data files; the count observed on that write must come back 0,
+    not raise on schema inference."""
     from data_engineering_pipeline_spark.operators.upsert import (
         upsert_parquet,
     )
@@ -335,3 +339,89 @@ def test_upsert_parquet_empty_new_fresh_table(spark, tmp_path):
     assert upsert_parquet(
         spark, path, empty, ["k"], "ver", ["lang"]
     ) == 0
+
+
+_KLV = "k long, lang string, v string, ver long"
+
+
+@pytest.mark.parametrize("partition_cols", [None, ["lang"]])
+def test_upsert_count_is_rows_on_disk(spark, tmp_path, partition_cols):
+    """The count upsert_parquet returns, observed on its write, is the
+    table's row count on disk: fresh, merged over, and re-merged with an
+    empty batch."""
+    path = str(tmp_path / "t")
+
+    def upsert(rows):
+        df = spark.createDataFrame(rows, _KLV)
+        return upsert_parquet(spark, path, df, ["k"], "ver", partition_cols)
+
+    assert upsert([(1, "de", "a", 1), (2, "en", "b", 1)]) == 2
+    assert spark.read.parquet(path).count() == 2
+    assert upsert([(1, "de", "a2", 2), (3, "fr", "c", 1)]) == 3
+    assert spark.read.parquet(path).count() == 3
+    assert upsert([]) == 3
+    assert spark.read.parquet(path).count() == 3
+
+
+def test_scoped_upsert_count_is_touched_rows_on_disk(spark, tmp_path):
+    """upsert_parquet_scoped's observed count: every row on a bootstrap,
+    the rows of the touched partitions on a merge."""
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(1, "de", "a", 1), (2, "de", "b", 1), (3, "en", "c", 1)], _KLV
+    )
+    assert upsert_parquet_scoped(spark, path, base, ["k"], "ver", ["lang"]) == 3
+    batch = spark.createDataFrame([(1, "de", "a2", 2), (4, "de", "d", 1)], _KLV)
+    n = upsert_parquet_scoped(spark, path, batch, ["k"], "ver", ["lang"])
+    on_disk = spark.read.parquet(path)
+    assert n == on_disk.filter(F.col("lang") == "de").count() == 3
+    assert on_disk.count() == 4
+
+
+@pytest.mark.parametrize("scoped", [False, True])
+def test_upsert_rejects_batch_with_other_columns(spark, tmp_path, scoped):
+    """The old side read with its footer schema still meets the batch in
+    unionByName: a batch whose columns differ from the table's raises,
+    and the table is left as it was."""
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame([(1, "de", "a", 1)], _KLV)
+    other = spark.createDataFrame(
+        [(1, "de", "x", 2)], "k long, lang string, w string, ver long"
+    )
+    upsert = upsert_parquet_scoped if scoped else upsert_parquet
+    upsert(spark, path, base, ["k"], "ver", ["lang"])
+    with pytest.raises(AnalysisException):
+        upsert(spark, path, other, ["k"], "ver", ["lang"])
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [
+        (1, "a", 1, "de")
+    ]
+
+
+def test_read_layer_matches_inference_without_its_job(spark, spark_jobs, tmp_path):
+    """read_layer takes the schema from one footer: no inference job, the
+    same schema and rows as spark.read.parquet, hive partition columns
+    still appended. A footer without Spark's schema falls back to
+    inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "de", "a", 1), (2, "en", None, 1)], _KLV
+    )
+    df.write.partitionBy("lang").parquet(path)
+    inferred, inference_jobs = spark_jobs(lambda: spark.read.parquet(path))
+    footer, footer_jobs = spark_jobs(lambda: read_layer(spark, path))
+    assert (inference_jobs, footer_jobs) == (1, 0)
+    assert footer.columns == ["k", "v", "ver", "lang"]
+    assert footer.schema == inferred.schema
+    assert sorted(footer.collect()) == sorted(inferred.collect())
+
+    plain = str(tmp_path / "plain")
+    os.makedirs(plain)
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", None]}),
+                   os.path.join(plain, "part-0.parquet"))
+    assert read_layer(spark, plain).schema == spark.read.parquet(plain).schema
+    assert sorted(read_layer(spark, plain).collect()) == sorted(
+        spark.read.parquet(plain).collect()
+    )
