@@ -17,9 +17,8 @@ and only terminal stages (writes/counts) trigger jobs, so the reference's
 Python/SQL process boundaries collapse into exchange boundaries inside a
 single plan (SURVEY.md §3). Jobs follow the plan's exchanges, not the
 stages: with AQE each shuffle or broadcast stage of a terminal action is
-its own Spark job. The reference pipelines run 5 jobs per ingest and 5
-per transform (plans/reference_pipelines.py lists where each comes
-from)."""
+its own Spark job (plans/reference_pipelines.py lists the reference
+pipelines' jobs)."""
 
 from __future__ import annotations
 

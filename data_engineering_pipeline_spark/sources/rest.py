@@ -25,7 +25,6 @@ from collections.abc import Callable, Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_engineering_pipeline_spark.schemas import WB_RECORD_SCHEMA
@@ -132,29 +131,17 @@ def fetch_fanout(
     return out
 
 
-def _value_as_double(rec):
+def _value_as_double(rec: dict) -> dict:
     """JSON has one number type: an integral `value` (`3`) is the number
     `3.0`, which the reference stores alike in its NUMERIC column
-    (database.py). A bool is not a number here and still fails."""
-    v = rec.get("value") if isinstance(rec, dict) else None
-    return {**rec, "value": float(v)} if type(v) is int else rec
-
-
-_PLAIN = {T.StringType: str, T.DoubleType: float}
-
-
-def _plain(v, dtype: T.DataType) -> bool:
-    """True when `v` is None or exactly the Python type of `dtype` (dicts
-    for structs, recursively): the inputs Arrow converts as Spark's row
-    conversion does. Anything else (an int `date`, a bool `value`, a
-    tuple struct) takes the row path, which stringifies or rejects it."""
-    if v is None:
-        return True
-    if isinstance(dtype, T.StructType):
-        return type(v) is dict and all(
-            _plain(v.get(f.name), f.dataType) for f in dtype.fields
-        )
-    return type(v) is _PLAIN[type(dtype)]
+    (database.py). A `value` of any other type (a string, a bool) raises
+    `TypeError`; Arrow alone would coerce `True` to 1.0."""
+    v = rec.get("value")
+    if v is None or type(v) is float:
+        return rec
+    if type(v) is int:
+        return {**rec, "value": float(v)}
+    raise TypeError(f"record value {v!r} ({type(v).__name__}) is not a number")
 
 
 def records_to_dataframe(spark: SparkSession, records: list[dict]) -> DataFrame:
@@ -162,11 +149,11 @@ def records_to_dataframe(spark: SparkSession, records: list[dict]) -> DataFrame:
     (schemas.WB_RECORD_SCHEMA). Tolerates missing keys (None structs) and
     ignores extra ones.
 
-    Records of plain JSON types are handed over as one Arrow table, which
-    the JVM reads as columnar batches; a pickled list of rows would be
-    unpickled again by every job that scans it (two per ingest)."""
+    The records are handed over as one Arrow table, which the JVM reads
+    as columnar batches; a pickled list of rows would be unpickled again
+    by every job that scans it (two per ingest). A field of the wrong
+    type raises `TypeError` (Arrow's `ArrowTypeError` for the string
+    fields)."""
     rows = [_value_as_double(r) for r in records]
-    if all(_plain(r, WB_RECORD_SCHEMA) for r in rows):
-        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(WB_RECORD_SCHEMA))
-        return spark.createDataFrame(table, WB_RECORD_SCHEMA)
-    return spark.createDataFrame(rows, WB_RECORD_SCHEMA)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(WB_RECORD_SCHEMA))
+    return spark.createDataFrame(table, WB_RECORD_SCHEMA)

@@ -26,7 +26,9 @@ def spark_jobs(spark):
     """`spark_jobs(fn)` runs `fn()` under a job group of its own and
     returns (fn's result, the number of Spark jobs it ran). Job counts
     do not depend on machine load, so a plan regression fails the
-    assertion without timing noise."""
+    assertion without timing noise. The status store is filled from
+    Spark's asynchronous listener bus, so the bus is drained before the
+    jobs are counted."""
     sc = spark.sparkContext
 
     def run(fn):
@@ -36,6 +38,7 @@ def spark_jobs(spark):
             out = fn()
         finally:
             sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run

@@ -63,12 +63,11 @@ def _row(rec=GOOD, **changed):
     [
         # a JSON integer is a number: NUMERIC in the reference (database.py)
         ([{**GOOD, "value": 3}], [_row(value=3.0)]),
-        # a non-string in a string field is stringified, as Spark's row
-        # conversion does; the year validates downstream
-        ([{**GOOD, "date": 2015}], [_row(date="2015")]),
         ([{**GOOD, "value": "3"}], TypeError),
         # a bool is not a number (Arrow alone would coerce it to 1.0)
         ([{**GOOD, "value": True}], TypeError),
+        # a string field takes only strings
+        ([{**GOOD, "date": 2015}], TypeError),
         ([{**GOOD, "country": None}], [_row(country=None)]),
         ([{k: v for k, v in GOOD.items() if k != "date"}], [_row(date=None)]),
         ([{**GOOD, "country": {"id": "ZA"}}],
@@ -76,14 +75,14 @@ def _row(rec=GOOD, **changed):
         ([{**GOOD, "unit": "", "obs_status": "", "decimal": 1}], [_row()]),
         ([], []),
     ],
-    ids=["int-value", "int-date", "str-value", "bool-value", "none-struct",
+    ids=["int-value", "str-value", "bool-value", "int-date", "none-struct",
          "missing-key", "missing-nested-key", "extra-keys", "empty"],
 )
 def test_records_to_dataframe_accepted_inputs(spark, records, want):
     """What `records_to_dataframe` accepts, and the rows it makes."""
     if want is TypeError:
-        with pytest.raises(TypeError, match="DoubleType"):
-            records_to_dataframe(spark, records).collect()
+        with pytest.raises(TypeError):
+            records_to_dataframe(spark, records)
         return
     got = records_to_dataframe(spark, records).collect()
     assert [r.asDict(recursive=True) for r in got] == want
